@@ -4,38 +4,46 @@
     ingest (S4) → compensate (C1) → calibrate (C2) → gate (P2/P5)
     → summarize (A1-A5) → histogram (A11) → export (S5)
 
-Everything up to the aggregations is a single narrow pipeline —
-scan → mapInPandas parse → codegen projections/filters — so the only
-shuffles are the per-sample aggregations at the end. That is the
-100 TB shape: files parallelize the scan, stats reduce map-side.
+The ingest parses each file straight into wide event rows
+(sources.fcs.read_fcs_wide), so everything up to the aggregations is a
+single narrow pipeline — scan → mapInPandas parse → codegen
+projections/filters — and the only shuffles are the per-sample
+aggregations at the end, one for the stats and one for the histogram.
+That is the 100 TB shape: files parallelize the scan, stats reduce
+map-side. The three outputs all derive from the gated point cloud;
+``export_outputs`` persists it for the duration of the writes, so one
+export parses the input once.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fcs_etl_reactor_spark.io import write_parquet
 from fcs_etl_reactor_spark.operators.beads import log_histogram
 from fcs_etl_reactor_spark.operators.compensation import compensate
 from fcs_etl_reactor_spark.operators.gates import apply_gates
-from fcs_etl_reactor_spark.sources.fcs import fcs_wide, read_fcs_long
+from fcs_etl_reactor_spark.sources.fcs import read_fcs_wide
+
+
+def _stack(df: DataFrame, channels: list[str]) -> DataFrame:
+    """Wide events → (sample_id, channel, value)."""
+    args = ", ".join(f"'{c}', `{c}`" for c in channels)
+    return df.select("sample_id", F.expr(f"stack({len(channels)}, {args}) AS (channel, value)"))
 
 
 def channel_stats(df: DataFrame, channels: list[str]) -> DataFrame:
     """Per-sample-per-channel summary stats (the reference's stats CSV):
-    count, mean, stddev, geo-mean, min/max, median."""
-    longf = df.select(
-        "sample_id",
-        F.expr(
-            "stack({n}, {args}) AS (channel, value)".format(
-                n=len(channels),
-                args=", ".join(f"'{c}', `{c}`" for c in channels),
-            )
-        ),
-    )
-    pos = longf.filter(F.col("value") > 0)
+    count, mean, stddev, min/max, median, and geo-mean/geo-stddev over
+    the positive values (null when a group has none), in one
+    aggregation."""
+    log_pos = F.when(F.col("value") > 0, F.log("value"))
     return (
-        longf.groupBy("sample_id", "channel")
+        _stack(df, channels)
+        .groupBy("sample_id", "channel")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.avg("value").alias("mean"),
@@ -43,16 +51,25 @@ def channel_stats(df: DataFrame, channels: list[str]) -> DataFrame:
             F.min("value").alias("min"),
             F.max("value").alias("max"),
             F.percentile_approx("value", 0.5).alias("median_approx"),
-        )
-        .join(
-            pos.groupBy("sample_id", "channel").agg(
-                F.exp(F.avg(F.log("value"))).alias("geo_mean"),
-                F.exp(F.stddev_samp(F.log("value"))).alias("geo_stddev"),
-            ),
-            ["sample_id", "channel"],
-            "left",
+            F.exp(F.avg(log_pos)).alias("geo_mean"),
+            F.exp(F.stddev_samp(log_pos)).alias("geo_stddev"),
         )
     )
+
+
+def export_outputs(
+    outputs: dict[str, DataFrame], write: Callable[[str, DataFrame], None]
+) -> None:
+    """Call ``write(name, df)`` for every pipeline output with the point
+    cloud persisted: stats and histogram are built on it, so their plans
+    read the cached rows instead of parsing the input again. The cache
+    is dropped when the writes end, whether or not one raised."""
+    shared = outputs["point_cloud"].persist()
+    try:
+        for name, df in outputs.items():
+            write(name, df)
+    finally:
+        shared.unpersist()
 
 
 def run_fcs_pipeline(
@@ -70,7 +87,7 @@ def run_fcs_pipeline(
     calibration maps channel → (a, b) for mefl = a*x + b (linear) —
     log-domain curves come from operators.beads.calibrate.
     """
-    wide = fcs_wide(read_fcs_long(spark, fcs_path), channels)
+    wide = read_fcs_wide(spark, fcs_path, channels)
 
     if spillover_inverse is not None:
         comp = compensate(wide, channels, spillover_inverse, keep=["sample_id", "event_id"])
@@ -88,26 +105,20 @@ def run_fcs_pipeline(
         wide = apply_gates(wide, gates).filter(F.col("all_gates"))
         wide = wide.drop("all_gates", *gates.keys())
 
-    point_cloud = wide
-    stats = channel_stats(wide, channels)
-    hist = log_histogram(
-        point_cloud.select(
-            "sample_id",
-            F.expr(
-                "stack({n}, {args}) AS (channel, value)".format(
-                    n=len(channels),
-                    args=", ".join(f"'{c}', `{c}`" for c in channels),
-                )
-            ),
-        ),
-        group_cols=["sample_id", "channel"],
-    )
+    outputs = {
+        "point_cloud": wide,
+        "stats": channel_stats(wide, channels),
+        "histogram": log_histogram(_stack(wide, channels), group_cols=["sample_id", "channel"]),
+    }
 
     if output_path:
-        point_cloud.write.mode("overwrite").partitionBy("sample_id").parquet(
-            f"{output_path}/point_cloud"
+        export_outputs(
+            outputs,
+            lambda name, df: write_parquet(
+                df,
+                f"{output_path}/{name}",
+                partition_by=["sample_id"] if name == "point_cloud" else None,
+            ),
         )
-        stats.write.mode("overwrite").parquet(f"{output_path}/stats")
-        hist.write.mode("overwrite").parquet(f"{output_path}/histogram")
 
-    return {"point_cloud": point_cloud, "stats": stats, "histogram": hist}
+    return outputs

@@ -575,10 +575,10 @@ def _fcs_pipeline_dir(spark: SparkSession, sf_dir: str) -> str:
 )
 def q7j_fcs_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fcs_etl_reactor_spark.operators.gates import apply_gates, range_gate
-    from fcs_etl_reactor_spark.sources.fcs import fcs_wide, read_fcs_long
+    from fcs_etl_reactor_spark.sources.fcs import read_fcs_wide
 
     src = _fcs_pipeline_dir(spark, sf_dir)
-    wide = fcs_wide(read_fcs_long(spark, src + "/*.fcs"), ["VAL", "USER"])
+    wide = read_fcs_wide(spark, src + "/*.fcs", ["VAL", "USER"])
     # row i of the matrix is comp_channel_i's weights over raw channels
     comp = compensate(
         wide, ["VAL", "USER"], [[1.0, -0.1], [0.0, 1.0]],

@@ -110,12 +110,14 @@ def validate_message(msg: dict) -> list[str]:
 def handle_message(spark: SparkSession, msg: dict) -> dict:
     """Validate, run the pipeline, export if asked.
 
-    Returns {"outputs": {name: DataFrame}, "written": [paths]} —
-    DataFrames stay lazy unless exported, so a caller can chain
-    further plans onto them with zero extra passes.
+    Returns {"outputs": {name: DataFrame}, "written": [paths]}. The
+    DataFrames stay lazy and uncached: an export shares one parse of
+    the input across its three writes (plans.fcs_pipeline.export_outputs)
+    and drops that cache before returning, so a caller can chain further
+    plans onto them without holding cached blocks.
     """
     from fcs_etl_reactor_spark.io import write_csv
-    from fcs_etl_reactor_spark.plans.fcs_pipeline import run_fcs_pipeline
+    from fcs_etl_reactor_spark.plans.fcs_pipeline import export_outputs, run_fcs_pipeline
 
     errors = validate_message(msg)
     if errors:
@@ -138,10 +140,13 @@ def handle_message(spark: SparkSession, msg: dict) -> dict:
     written = []
     out_dir = msg.get("output_dir")
     if out_dir:
-        for name, df in outputs.items():
+
+        def _write(name, df):
             dest = f"{out_dir.rstrip('/')}/{name}"
             write_csv(df, dest)
             written.append(dest)
+
+        export_outputs(outputs, _write)
     return {"outputs": outputs, "written": written}
 
 

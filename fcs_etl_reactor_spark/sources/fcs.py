@@ -8,17 +8,17 @@ $DATATYPE, $BYTEORD, $PnE log-amplifier settings), and a DATA segment
 the public FCS 3.0/3.1 specification (SURVEY.md §0.2 step 1; the
 reference checkout itself is empty).
 
-Spark-first design:
-- ``spark.read.format("binaryFile")`` lists and reads whole files —
-  one row per file (FCS files are single-sample, MB-scale; the
-  parallel unit at 100 TB is the FILE, so binaryFile's
-  file-per-partition model is the right granularity);
-- a ``mapInPandas`` parser (Arrow-batched) decodes header+TEXT+DATA
-  per file with NumPy and emits LONG-format rows
-  (sample_id, event_id, channel, value) — schema-stable regardless of
-  each file's dynamic channel set (SURVEY.md §1.1 layout (b));
-- ``fcs_wide`` pivots long→wide (C4) when a fixed channel set is
-  requested at the API edge.
+Spark-first design: ``spark.read.format("binaryFile")`` reads whole
+files, one row per file (FCS files are single-sample and MB-scale, so
+the parallel unit is the FILE), and a ``mapInPandas`` parser decodes
+each file with NumPy into one pandas frame. The readers share that
+scan and per-file loop. ``read_fcs_wide`` emits one row per event,
+(sample_id, event_id, <channels>), for a pinned channel list: the
+pipeline's ingest, with no shuffle before the first aggregation.
+``read_fcs_long`` emits (sample_id, event_id, channel, value), a schema
+stable across channel sets (SURVEY.md §1.1 layout (b)) that
+``fcs_wide`` pivots long→wide (C4). ``read_fcs_metadata`` emits the
+TEXT segment as (sample_id, key, value).
 
 Parsing is defensive per the spec's quirks: delimiter escaping
 (doubled delimiters inside values), missing $BYTEORD variants, and
@@ -27,8 +27,7 @@ $PnE log-amplified parameters (decoded as value = 10^(f1·x/range)·f2).
 
 from __future__ import annotations
 
-import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 
@@ -147,15 +146,86 @@ def parse_fcs_bytes(data: bytes) -> tuple[dict[str, str], list[str], "object"]:
     return kv, channels, mat
 
 
+def _map_files(
+    spark: SparkSession, path: str, on_error: str,
+    to_frame: Callable[..., pd.DataFrame], schema: StructType,
+) -> DataFrame:
+    """binaryFile scan → one mapInPandas parser that yields
+    ``to_frame(sample_id, text_metadata, channel_names, matrix)`` per
+    file. ``on_error="skip"`` drops a file that fails to parse;
+    ``"fail"`` lets its error fail the job."""
+    if on_error not in ("fail", "skip"):
+        raise ValueError(f"on_error must be 'fail' or 'skip', got {on_error!r}")
+    skip_bad = on_error == "skip"
+
+    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import os
+
+        for pdf in batches:
+            for file_path, content in zip(pdf["path"], pdf["content"]):
+                try:
+                    parsed = parse_fcs_bytes(bytes(content))
+                except Exception:
+                    if skip_bad:
+                        continue
+                    raise
+                yield to_frame(os.path.basename(file_path), *parsed)
+
+    bins = spark.read.format("binaryFile").load(path).select("path", "content")
+    return bins.mapInPandas(_parse, schema)
+
+
+def _long_frame(sample_id: str, channels: list[str], mat) -> pd.DataFrame:
+    """One file's events in the long format (FCS_LONG_SCHEMA order)."""
+    import numpy as np
+
+    n_tot, n_par = mat.shape
+    return pd.DataFrame(
+        {
+            "sample_id": np.repeat(sample_id, n_tot * n_par),
+            "event_id": np.repeat(np.arange(n_tot, dtype=np.int64), n_par),
+            "channel": np.tile(np.array(channels, dtype=object), n_tot),
+            "value": mat.ravel(),
+        }
+    )
+
+
+def read_fcs_wide(
+    spark: SparkSession, path: str, channels: list[str], on_error: str = "fail"
+) -> DataFrame:
+    """Ingest a directory (or glob) of .fcs files as one row per event:
+    (sample_id, event_id, <channels>), every channel a double.
+
+    Channels are matched by name. A requested channel that a file lacks
+    is null for that file's events, and a channel name a file repeats
+    takes its first occurrence. ``on_error`` as for ``read_fcs_long``.
+    """
+    schema = StructType(
+        FCS_LONG_SCHEMA.fields[:2] + [StructField(c, DoubleType(), True) for c in channels]
+    )
+
+    def _wide(sample_id, _kv, names, mat) -> pd.DataFrame:
+        import numpy as np
+
+        first = {name: k for k, name in reversed(list(enumerate(names)))}
+        n_tot = mat.shape[0]
+        cols = {
+            "sample_id": np.repeat(sample_id, n_tot),
+            "event_id": np.arange(n_tot, dtype=np.int64),
+        }
+        for c in channels:
+            cols[c] = mat[:, first[c]] if c in first else np.full(n_tot, np.nan)
+        return pd.DataFrame(cols)
+
+    return _map_files(spark, path, on_error, _wide, schema)
+
+
 def read_fcs_long(
     spark: SparkSession, path: str, on_error: str = "fail"
 ) -> DataFrame:
     """Ingest a directory (or glob) of .fcs files into the engine's
-    long format (sample_id, event_id, channel, value).
-
-    binaryFile scan → mapInPandas parser: each Arrow batch holds whole
-    files; output row count is events × channels per file. Files are
-    independent → embarrassingly parallel across executors.
+    long format (sample_id, event_id, channel, value): events × channels
+    rows per file.
 
     on_error: "fail" (default — a malformed file aborts the job with
     the parser's error) or "skip" (malformed files contribute zero
@@ -163,62 +233,32 @@ def read_fcs_long(
     must not sink a 100k-file batch — PERMISSIVE-mode semantics for a
     binary format the JSON/CSV readers get for free).
     """
-    if on_error not in ("fail", "skip"):
-        raise ValueError(f"on_error must be 'fail' or 'skip', got {on_error!r}")
-    bins = spark.read.format("binaryFile").load(path)
-    skip_bad = on_error == "skip"
-
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        import os
-
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                sample_id = os.path.basename(row["path"])
-                try:
-                    _, channels, mat = parse_fcs_bytes(bytes(row["content"]))
-                except Exception:
-                    if skip_bad:
-                        continue
-                    raise
-                n_tot, n_par = mat.shape
-                yield pd.DataFrame(
-                    {
-                        "sample_id": np.repeat(sample_id, n_tot * n_par),
-                        "event_id": np.repeat(np.arange(n_tot, dtype=np.int64), n_par),
-                        "channel": np.tile(np.array(channels, dtype=object), n_tot),
-                        "value": mat.ravel(),
-                    }
-                )
-
-    return bins.select("path", "content").mapInPandas(_parse, FCS_LONG_SCHEMA)
+    return _map_files(
+        spark, path, on_error,
+        lambda sample_id, _kv, channels, mat: _long_frame(sample_id, channels, mat),
+        FCS_LONG_SCHEMA,
+    )
 
 
 def read_fcs_metadata(spark: SparkSession, path: str) -> DataFrame:
     """TEXT-segment metadata as (sample_id, key, value) rows."""
-    bins = spark.read.format("binaryFile").load(path)
 
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import os
+    def _meta(sample_id, kv, _channels, _mat) -> pd.DataFrame:
+        return pd.DataFrame(
+            {
+                "sample_id": [sample_id] * len(kv),
+                "key": list(kv.keys()),
+                "value": list(kv.values()),
+            }
+        )
 
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                sample_id = os.path.basename(row["path"])
-                kv, _, _ = parse_fcs_bytes(bytes(row["content"]))
-                yield pd.DataFrame(
-                    {
-                        "sample_id": [sample_id] * len(kv),
-                        "key": list(kv.keys()),
-                        "value": list(kv.values()),
-                    }
-                )
-
-    return bins.select("path", "content").mapInPandas(_parse, FCS_META_SCHEMA)
+    return _map_files(spark, path, "fail", _meta, FCS_META_SCHEMA)
 
 
 def fcs_wide(long_df: DataFrame, channels: list[str]) -> DataFrame:
     """Long→wide pivot (C4) with a pinned channel list so the schema is
-    static (no extra distinct pass at plan time)."""
+    static (no extra distinct pass at plan time). Straight from files,
+    ``read_fcs_wide`` gives the same rows without the shuffle."""
     return (
         long_df.groupBy("sample_id", "event_id")
         .pivot("channel", channels)

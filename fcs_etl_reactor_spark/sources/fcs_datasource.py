@@ -14,8 +14,8 @@ Scale: planning lists files driver-side (same as any file source);
 each partition is one file, so a 100k-file archive fans out to 100k
 tasks with zero cross-file coordination. For few-but-huge files,
 read_fcs_long's binaryFile+mapInPandas path has identical semantics —
-the two share parse_fcs_bytes, and the equivalence is asserted in
-tests/test_fcs.py.
+the two share parse_fcs_bytes and the long-frame builder, and the
+equivalence is asserted in tests/test_fcs.py.
 """
 
 from __future__ import annotations
@@ -26,6 +26,15 @@ import os
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 FCS_DDL_SCHEMA = "sample_id string, event_id bigint, channel string, value double"
+
+
+def _file_frame(path: str):
+    """One .fcs file in the long format, as read_fcs_long builds it."""
+    from fcs_etl_reactor_spark.sources.fcs import _long_frame, parse_fcs_bytes
+
+    with open(path, "rb") as fh:
+        _, channels, mat = parse_fcs_bytes(fh.read())
+    return _long_frame(os.path.basename(path), channels, mat)
 
 
 class FCSFilePartition(InputPartition):
@@ -51,24 +60,9 @@ class FCSDataSourceReader(DataSourceReader):
     def read(self, partition: FCSFilePartition):
         # Executor-side: parse ONE file, emit one Arrow batch. Imports
         # stay inside read() so the planner never needs numpy/pyarrow.
-        import numpy as np
         import pyarrow as pa
 
-        from fcs_etl_reactor_spark.sources.fcs import parse_fcs_bytes
-
-        with open(partition.path, "rb") as fh:
-            _, channels, mat = parse_fcs_bytes(fh.read())
-        sample_id = os.path.basename(partition.path)
-        n_tot, n_par = mat.shape
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(np.repeat(sample_id, n_tot * n_par)),
-                pa.array(np.repeat(np.arange(n_tot, dtype=np.int64), n_par)),
-                pa.array(np.tile(np.array(channels, dtype=object), n_tot)),
-                pa.array(mat.ravel()),
-            ],
-            names=["sample_id", "event_id", "channel", "value"],
-        )
+        yield pa.RecordBatch.from_pandas(_file_frame(partition.path), preserve_index=False)
 
 
 class FCSDataSource(DataSource):
@@ -109,14 +103,7 @@ from pyspark.sql.datasource import SimpleDataSourceStreamReader
 
 
 def _parse_file_rows(path: str):
-    from fcs_etl_reactor_spark.sources.fcs import parse_fcs_bytes
-
-    with open(path, "rb") as fh:
-        _, channels, mat = parse_fcs_bytes(fh.read())
-    sample_id = os.path.basename(path)
-    for ev in range(mat.shape[0]):
-        for ci, ch in enumerate(channels):
-            yield (sample_id, ev, ch, float(mat[ev, ci]))
+    return _file_frame(path).itertuples(index=False, name=None)
 
 
 class FCSStreamReader(SimpleDataSourceStreamReader):

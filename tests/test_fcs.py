@@ -18,14 +18,17 @@ from fcs_etl_reactor_spark.operators.gates import (
     polygon_gate,
     range_gate,
 )
-from fcs_etl_reactor_spark.plans.fcs_pipeline import run_fcs_pipeline
+from fcs_etl_reactor_spark.plans.fcs_pipeline import channel_stats, run_fcs_pipeline
 from fcs_etl_reactor_spark.sources.fcs import (
     fcs_wide,
     make_fcs_bytes,
     parse_fcs_bytes,
     read_fcs_long,
     read_fcs_metadata,
+    read_fcs_wide,
 )
+
+WIDE_CHANNELS = ["FSC-A", "SSC-A", "FL1-A"]
 
 
 @pytest.fixture(scope="module")
@@ -95,6 +98,39 @@ class TestFcsSpark:
         wide = fcs_wide(read_fcs_long(spark, fcs_dir), ["FSC-A", "SSC-A", "FL1-A"])
         a0 = wide.filter("sample_id = 'sample_a.fcs' AND event_id = 0").collect()[0]
         assert (a0["FSC-A"], a0["SSC-A"], a0["FL1-A"]) == (100.0, 5.0, 1.0)
+
+    def test_wide_reader_equals_pivot(self, spark, fcs_dir):
+        # fcs_dir holds a float32 little-endian and a float64 big-endian file
+        direct = read_fcs_wide(spark, fcs_dir, WIDE_CHANNELS)
+        pivot = fcs_wide(read_fcs_long(spark, fcs_dir), WIDE_CHANNELS)
+        assert direct.schema == pivot.schema
+        order = ["sample_id", "event_id"]
+        got = [tuple(r) for r in direct.orderBy(order).collect()]
+        assert got == [tuple(r) for r in pivot.orderBy(order).collect()]
+        assert len(got) == 5
+
+    def test_wide_reader_missing_and_repeated_channels(self, spark, tmp_path):
+        d = tmp_path / "mixed_channels"
+        d.mkdir()
+        (d / "no_fl1.fcs").write_bytes(
+            make_fcs_bytes(["FSC-A", "SSC-A"], [[1.0, 2.0], [3.0, 4.0]])
+        )
+        # FSC-A appears twice: the first occurrence (column 0) wins
+        (d / "dup.fcs").write_bytes(
+            make_fcs_bytes(["FSC-A", "FL1-A", "FSC-A", "SSC-A"], [[5.0, 6.0, 7.0, 8.0]])
+        )
+        rows = read_fcs_wide(spark, str(d), WIDE_CHANNELS).orderBy(
+            "sample_id", "event_id"
+        ).collect()
+        assert [tuple(r) for r in rows] == [
+            ("dup.fcs", 0, 5.0, 8.0, 6.0),
+            ("no_fl1.fcs", 0, 1.0, 2.0, None),
+            ("no_fl1.fcs", 1, 3.0, 4.0, None),
+        ]
+        # a missing channel is null, as the long→wide pivot gives it
+        no_fl1 = str(d / "no_fl1.fcs")
+        pivot = fcs_wide(read_fcs_long(spark, no_fl1), WIDE_CHANNELS)
+        assert sorted(tuple(r) for r in pivot.collect()) == [tuple(r) for r in rows[1:]]
 
 
 class TestGates:
@@ -184,6 +220,21 @@ class TestPipeline:
         assert (tmp_path / "out" / "stats").exists()
         pc = spark.read.parquet(str(tmp_path / "out" / "point_cloud"))
         assert pc.count() == 3
+
+    def test_channel_stats_without_positive_values(self, spark):
+        df = spark.createDataFrame(
+            [("s", 0, -1.0, 2.0), ("s", 1, 0.0, 8.0), ("s", 2, -3.0, -4.0)],
+            "sample_id STRING, event_id BIGINT, NEG DOUBLE, MIX DOUBLE",
+        )
+        got = {r["channel"]: r for r in channel_stats(df, ["NEG", "MIX"]).collect()}
+        assert got["NEG"]["n_events"] == 3
+        assert got["NEG"]["geo_mean"] is None and got["NEG"]["geo_stddev"] is None
+        # geo stats use only the positive values 2 and 8; counts use all
+        assert got["MIX"]["n_events"] == 3
+        assert got["MIX"]["geo_mean"] == pytest.approx(4.0)
+        assert got["MIX"]["geo_stddev"] == pytest.approx(
+            math.exp(math.sqrt(2) * math.log(4.0) / 2)
+        )
 
 
 class TestFcsDataSource:
@@ -324,9 +375,7 @@ class TestBadFileTolerance:
         d = tmp_path / "mixed"
         d.mkdir()
         mat = np.arange(12, dtype=float).reshape(4, 3)
-        (d / "good.fcs").write_bytes(
-            make_fcs_bytes(["FSC-A", "SSC-A", "FL1-A"], mat)
-        )
+        (d / "good.fcs").write_bytes(make_fcs_bytes(WIDE_CHANNELS, mat))
         (d / "bad.fcs").write_bytes(b"NOT-AN-FCS-FILE" * 10)
 
         # default: the corrupt file fails the job
@@ -338,7 +387,16 @@ class TestBadFileTolerance:
         assert {r["sample_id"] for r in out.select("sample_id").distinct().collect()} == {
             "good.fcs"
         }
+        # the wide reader applies the same skip
+        with pytest.raises(Exception):
+            read_fcs_wide(spark, str(d), WIDE_CHANNELS).count()
+        wide = read_fcs_wide(spark, str(d), WIDE_CHANNELS, on_error="skip")
+        assert [tuple(r) for r in wide.orderBy("event_id").collect()] == [
+            ("good.fcs", i, *mat[i].tolist()) for i in range(4)
+        ]
 
     def test_on_error_validates(self, spark):
         with pytest.raises(ValueError):
             read_fcs_long(spark, "/nonexistent", on_error="maybe")
+        with pytest.raises(ValueError):
+            read_fcs_wide(spark, "/nonexistent", WIDE_CHANNELS, on_error="maybe")

@@ -5,6 +5,7 @@ import json
 
 import numpy as np
 import pytest
+from pyspark import StorageLevel
 
 from fcs_etl_reactor_spark.reactor import handle_message, validate_message
 from fcs_etl_reactor_spark.sources.fcs import make_fcs_bytes
@@ -79,3 +80,64 @@ class TestDispatch:
         summary = json.loads(line)
         assert summary["outputs"]["point_cloud"] == 100
         assert summary["written"] == []
+
+
+def _persistent_rdd_ids(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+class TestSharedParseLifetime:
+    """The export persists the point cloud for its three writes; no
+    cached block may outlive handle_message. Compared against the ids
+    persisted before the call, so blocks held by other tests in the
+    same session do not count."""
+
+    def test_no_persisted_rdds_after_export(self, spark, spool, tmp_path):
+        before = _persistent_rdd_ids(spark)
+        res = handle_message(
+            spark,
+            {"fcs_dir": spool, "channels": CHANNELS, "output_dir": str(tmp_path / "out")},
+        )
+        assert len(res["written"]) == 3
+        assert _persistent_rdd_ids(spark) == before
+        assert res["outputs"]["point_cloud"].storageLevel == StorageLevel.NONE
+        # the returned frames stay usable and do not re-cache on reuse
+        assert res["outputs"]["stats"].count() == 2 * len(CHANNELS)
+        assert _persistent_rdd_ids(spark) == before
+
+    def test_no_cache_entry_when_output_dir_is_a_file(self, spark, spool, tmp_path):
+        from fcs_etl_reactor_spark.plans.fcs_pipeline import run_fcs_pipeline
+
+        blocker = tmp_path / "not_a_dir"
+        blocker.write_text("x")
+        with pytest.raises(Exception):
+            handle_message(
+                spark, {"fcs_dir": spool, "channels": CHANNELS, "output_dir": str(blocker)}
+            )
+        # the first write fails before any block is cached; the cache
+        # entry registered for the point cloud must be gone all the same
+        same_plan = run_fcs_pipeline(spark, spool, CHANNELS)["point_cloud"]
+        assert same_plan.storageLevel == StorageLevel.NONE
+
+    def test_no_persisted_rdds_when_a_later_write_raises(
+        self, spark, spool, tmp_path, monkeypatch
+    ):
+        import fcs_etl_reactor_spark.io as io_mod
+
+        real_write = io_mod.write_csv
+
+        def write_then_fail(df, path):
+            if path.endswith("/stats"):
+                raise OSError("disk full")
+            real_write(df, path)
+
+        monkeypatch.setattr(io_mod, "write_csv", write_then_fail)
+        before = _persistent_rdd_ids(spark)
+        with pytest.raises(OSError, match="disk full"):
+            handle_message(
+                spark,
+                {"fcs_dir": spool, "channels": CHANNELS, "output_dir": str(tmp_path / "out")},
+            )
+        # the point cloud was written (its cache built) before the failure
+        assert (tmp_path / "out" / "point_cloud").exists()
+        assert _persistent_rdd_ids(spark) == before
