@@ -14,8 +14,23 @@ multiply the JVM already does for free at this matrix size.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def compensation_exprs(channels: list[str], matrix: list[list[float]]) -> list[Column]:
+    """Unaliased ``Σ_j matrix[i][j] * channels[j]`` per channel i, summed
+    left to right: ``(m[i][0]·c0 + m[i][1]·c1) + …``."""
+    n = len(channels)
+    assert len(matrix) == n and all(len(row) == n for row in matrix)
+    outs = []
+    for i in range(n):
+        expr = None
+        for j in range(n):
+            term = F.lit(matrix[i][j]) * F.col(channels[j])
+            expr = term if expr is None else expr + term
+        outs.append(expr)
+    return outs
 
 
 def compensate(
@@ -26,14 +41,8 @@ def compensate(
     prefix: str = "comp_",
 ) -> DataFrame:
     """Apply ``out_i = Σ_j matrix[i][j] * channels[j]`` per row."""
-    n = len(channels)
-    assert len(matrix) == n and all(len(row) == n for row in matrix)
-    outs = []
-    for i in range(n):
-        expr = None
-        for j in range(n):
-            term = F.lit(matrix[i][j]) * F.col(channels[j])
-            expr = term if expr is None else expr + term
-        outs.append(expr.alias(f"{prefix}{channels[i]}"))
+    outs = [
+        e.alias(f"{prefix}{c}") for c, e in zip(channels, compensation_exprs(channels, matrix))
+    ]
     keep_cols = [F.col(c) for c in (keep if keep is not None else df.columns)]
     return df.select(*keep_cols, *outs)

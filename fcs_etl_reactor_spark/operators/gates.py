@@ -2,22 +2,17 @@
 ellipse). The reference pipeline's step 3 (debris removal, population
 selection) reconstructed from the public TASBE/flowCore gating model.
 
-- Range and ellipse gates are pure Column predicates: they run inside
-  whole-stage codegen and push partially into the parquet scan.
-- Polygon gates need point-in-polygon; that's a vectorized
-  ``pandas_udf`` (Arrow batches, NumPy ray-casting) — the documented
-  UDF escape hatch (SURVEY.md §2.12 U2). Vertex arrays are closed
-  over as NumPy constants, so the per-batch cost is O(rows × edges)
-  C-speed with zero shuffle.
+All three gates are pure Column predicates: they run inside whole-stage
+codegen with no Python runner, and range gates push partially into the
+parquet scan. The polygon gate unrolls even-odd ray casting into one
+crossing test per edge, with the vertices as literals, so it costs
+O(rows × edges) JVM arithmetic and no shuffle.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
 
 
 def range_gate(col: Column | str, lo: float, hi: float) -> Column:
@@ -49,35 +44,34 @@ def ellipse_gate(
 
 
 def polygon_gate(x: Column | str, y: Column | str, vertices: list[tuple[float, float]]) -> Column:
-    """2-D polygon gate (P5): vectorized even-odd ray casting.
+    """2-D polygon gate (P5): even-odd ray casting as a Column expression.
 
-    ``vertices`` is the polygon boundary (closed implicitly). Points
-    exactly on an edge follow the half-open ray-casting convention.
+    ``vertices`` is the polygon boundary (closed implicitly). Edge i
+    joins vertex i to vertex i-1; it crosses the point's rightward ray
+    iff ``(y1 > py) != (y2 > py)`` and ``px < (x2-x1)*(py-y1)/(y2-y1)+x1``
+    (float64, in that op order), and the crossings are XOR-folded.
+    Points exactly on an edge follow that half-open convention.
+    Horizontal edges never cross, so they are left out, and no division
+    by zero is planned. A null coordinate is outside.
     """
-    import numpy as np
-
-    vx = np.array([v[0] for v in vertices], dtype=np.float64)
-    vy = np.array([v[1] for v in vertices], dtype=np.float64)
-
-    @F.pandas_udf(BooleanType())
-    def _inside(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        px = xs.to_numpy(dtype=np.float64)
-        py = ys.to_numpy(dtype=np.float64)
-        inside = np.zeros(len(px), dtype=bool)
-        n = len(vx)
-        j = n - 1
-        for i in range(n):
-            x1, y1, x2, y2 = vx[i], vy[i], vx[j], vy[j]
-            crosses = (y1 > py) != (y2 > py)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                xint = (x2 - x1) * (py - y1) / (y2 - y1) + x1
-            inside ^= crosses & (px < xint)
-            j = i
-        return pd.Series(inside)
-
-    xc = F.col(x) if isinstance(x, str) else x
-    yc = F.col(y) if isinstance(y, str) else y
-    return _inside(xc, yc)
+    px = (F.col(x) if isinstance(x, str) else x).cast("double")
+    py = (F.col(y) if isinstance(y, str) else y).cast("double")
+    # + 0.0 turns a -0.0 vertex into 0.0, which no comparison here can
+    # tell apart. Spark's Literal equality calls -0.0 and 0.0 equal but
+    # hashes them apart, and subexpression elimination then reads the
+    # never-computed slot of one for the other (a wrong, constant row).
+    vs = [(float(vx) + 0.0, float(vy) + 0.0) for vx, vy in vertices]
+    inside = None
+    for i in range(len(vs)):
+        x1, y1 = vs[i]
+        x2, y2 = vs[i - 1]
+        if y1 == y2:
+            continue
+        crosses = (F.lit(y1) > py) != (F.lit(y2) > py)
+        xint = F.lit(x2 - x1) * (py - F.lit(y1)) / F.lit(y2 - y1) + F.lit(x1)
+        term = crosses & (px < xint)
+        inside = term if inside is None else inside != term
+    return F.lit(False) if inside is None else F.coalesce(inside, F.lit(False))
 
 
 def apply_gates(df: DataFrame, gates: dict[str, Column]) -> DataFrame:

@@ -10,22 +10,33 @@ single narrow pipeline — scan → mapInPandas parse → codegen
 projections/filters — and the only shuffles are the per-sample
 aggregations at the end, one for the stats and one for the histogram.
 That is the 100 TB shape: files parallelize the scan, stats reduce
-map-side. The three outputs all derive from the gated point cloud;
-``export_outputs`` persists it for the duration of the writes, so one
-export parses the input once.
+map-side. The point cloud is one projection (compensation, then
+calibration, per channel) and at most one filter (the conjunction of
+the gates). operators.gates builds every gate as a Column expression,
+so with them the parse is the only Python in the plan.
+
+The three outputs all derive from the gated point cloud.
+``export_outputs`` persists it and submits the three writes at once
+from a thread pool, so their job submission, planning and commit
+overlap instead of queueing; the first write to reach a partition
+computes its cached block and the others read it, so one export still
+parses the input once.
 """
 
 from __future__ import annotations
 
+import operator
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fcs_etl_reactor_spark.io import write_parquet
 from fcs_etl_reactor_spark.operators.beads import log_histogram
-from fcs_etl_reactor_spark.operators.compensation import compensate
-from fcs_etl_reactor_spark.operators.gates import apply_gates
+from fcs_etl_reactor_spark.operators.compensation import compensation_exprs
 from fcs_etl_reactor_spark.sources.fcs import read_fcs_wide
 
 
@@ -60,14 +71,24 @@ def channel_stats(df: DataFrame, channels: list[str]) -> DataFrame:
 def export_outputs(
     outputs: dict[str, DataFrame], write: Callable[[str, DataFrame], None]
 ) -> None:
-    """Call ``write(name, df)`` for every pipeline output with the point
-    cloud persisted: stats and histogram are built on it, so their plans
-    read the cached rows instead of parsing the input again. The cache
-    is dropped when the writes end, whether or not one raised."""
+    """Call ``write(name, df)`` for every pipeline output, all at once,
+    with the point cloud persisted: stats and histogram are built on it,
+    so their plans read the cached rows instead of parsing the input
+    again, and a block is computed once whichever write reaches it
+    first. Each write runs on its own thread with the caller's job
+    group, tags and local properties.
+
+    Every write runs to its end even if another raises; then the first
+    error in ``outputs`` order is re-raised, so a failed export may
+    leave some outputs written. The cache is dropped once all writes
+    have ended, whether or not one raised."""
     shared = outputs["point_cloud"].persist()
+    inherit = inheritable_thread_target(shared.sparkSession)
     try:
-        for name, df in outputs.items():
-            write(name, df)
+        with ThreadPoolExecutor(len(outputs)) as pool:
+            futures = [pool.submit(inherit(write), name, df) for name, df in outputs.items()]
+        for future in futures:
+            future.result()
     finally:
         shared.unpersist()
 
@@ -87,23 +108,21 @@ def run_fcs_pipeline(
     calibration maps channel → (a, b) for mefl = a*x + b (linear) —
     log-domain curves come from operators.beads.calibrate.
     """
-    wide = read_fcs_wide(spark, fcs_path, channels)
-
-    if spillover_inverse is not None:
-        comp = compensate(wide, channels, spillover_inverse, keep=["sample_id", "event_id"])
-        wide = comp.select(
-            "sample_id",
-            "event_id",
-            *[F.col(f"comp_{c}").alias(c) for c in channels],
-        )
-
-    if calibration:
-        for ch, (a, b) in calibration.items():
-            wide = wide.withColumn(ch, F.lit(a) * F.col(ch) + F.lit(b))
-
+    calibration = calibration or {}
+    values = (
+        compensation_exprs(channels, spillover_inverse)
+        if spillover_inverse is not None
+        else [F.col(c) for c in channels]
+    )
+    for i, ch in enumerate(channels):
+        if ch in calibration:
+            a, b = calibration[ch]
+            values[i] = F.lit(a) * values[i] + F.lit(b)
+    wide = read_fcs_wide(spark, fcs_path, channels).select(
+        "sample_id", "event_id", *[v.alias(c) for c, v in zip(channels, values)]
+    )
     if gates:
-        wide = apply_gates(wide, gates).filter(F.col("all_gates"))
-        wide = wide.drop("all_gates", *gates.keys())
+        wide = wide.filter(reduce(operator.and_, gates.values()))
 
     outputs = {
         "point_cloud": wide,

@@ -1,16 +1,15 @@
 """P5 gating envelope query (SURVEY.md §2.2): polygon point-in-polygon
 gate over two lineitem-derived coordinates, oracle-checked exactly.
 
-The polygon gate itself is the vectorized pandas_udf ray-caster in
-operators/gates.py (the documented U2 escape hatch — point-in-polygon
-has no built-in Column form). The envelope makes it oracle-checkable:
-the SAME even-odd crossing arithmetic, with the SAME literal vertices,
-is emitted as SQL — float64 ops in identical order are IEEE-exact in
-both engines, so the boolean matches row for row (the q6f trick).
+The polygon gate is operators/gates.polygon_gate, an even-odd
+ray-caster built as a Column expression. The oracle is its SQL twin:
+the SAME crossing arithmetic, with the SAME literal vertices, emitted
+as SQL — float64 ops in identical order are IEEE-exact in both
+engines, so the boolean matches row for row (the q6f trick).
 
-Scale: the UDF is Arrow-batched, stateless, and shuffle-free — it
-filters at scan parallelism whatever the row count; per-batch cost is
-O(rows × edges) in NumPy.
+Scale: the gate is one codegen-fused projection, stateless and
+shuffle-free — O(rows × edges) JVM arithmetic at scan parallelism
+whatever the row count.
 """
 
 from __future__ import annotations
@@ -74,8 +73,7 @@ def q4b_polygon_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # q4e — ellipse gate (P5's second form): pure-expression membership,
-# whole-stage codegen, no UDF (unlike the polygon's ray-cast pandas
-# kernel — the ellipse needs no iteration). θ=0 keeps cos/sin exact
+# whole-stage codegen, no UDF. θ=0 keeps cos/sin exact
 # literals so both engines run identical IEEE arithmetic; rotation is
 # covered by operator unit tests. The gated rollup is the reference's
 # "population fraction per sample" shape.

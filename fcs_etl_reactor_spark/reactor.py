@@ -110,11 +110,15 @@ def validate_message(msg: dict) -> list[str]:
 def handle_message(spark: SparkSession, msg: dict) -> dict:
     """Validate, run the pipeline, export if asked.
 
-    Returns {"outputs": {name: DataFrame}, "written": [paths]}. The
-    DataFrames stay lazy and uncached: an export shares one parse of
-    the input across its three writes (plans.fcs_pipeline.export_outputs)
-    and drops that cache before returning, so a caller can chain further
-    plans onto them without holding cached blocks.
+    Returns {"outputs": {name: DataFrame}, "written": [paths]}, with
+    ``written`` in ``outputs`` order. The export writes the three CSVs
+    concurrently over one shared parse of the input
+    (plans.fcs_pipeline.export_outputs); if a write fails, the other
+    writes still finish and the first error is raised, so a failed
+    message may leave some outputs on disk. The returned DataFrames
+    stay lazy and uncached: the shared cache is dropped before
+    returning, so a caller can chain further plans onto them without
+    holding cached blocks.
     """
     from fcs_etl_reactor_spark.io import write_csv
     from fcs_etl_reactor_spark.plans.fcs_pipeline import export_outputs, run_fcs_pipeline
@@ -140,13 +144,9 @@ def handle_message(spark: SparkSession, msg: dict) -> dict:
     written = []
     out_dir = msg.get("output_dir")
     if out_dir:
-
-        def _write(name, df):
-            dest = f"{out_dir.rstrip('/')}/{name}"
-            write_csv(df, dest)
-            written.append(dest)
-
-        export_outputs(outputs, _write)
+        dests = {name: f"{out_dir.rstrip('/')}/{name}" for name in outputs}
+        export_outputs(outputs, lambda name, df: write_csv(df, dests[name]))
+        written = list(dests.values())
     return {"outputs": outputs, "written": written}
 
 

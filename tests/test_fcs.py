@@ -152,6 +152,9 @@ class TestGates:
         assert inside[(0.9, 0.1)] is True
         assert inside[(2.0, 2.0)] is False
         assert inside[(-1.0, 0.5)] is False
+        # a Column expression: no Python runner in the plan
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "EvalPython" not in plan
 
     def test_polygon_gate_triangle(self, spark):
         tri = [(0.0, 0.0), (2.0, 0.0), (0.0, 2.0)]
@@ -159,6 +162,14 @@ class TestGates:
         got = {(r["x"], r["y"]): r["i"] for r in
                df.withColumn("i", polygon_gate("x", "y", tri)).collect()}
         assert got[(0.5, 0.5)] is True and got[(1.5, 1.5)] is False
+
+    def test_polygon_gate_null_coordinate_is_outside(self, spark):
+        square = [(0.0, 0.0), (1.0, 0.0), (1.0, 1.0), (0.0, 1.0)]
+        df = spark.createDataFrame(
+            [(None, 0.5), (0.5, None), (0.5, 0.5)], "x DOUBLE, y DOUBLE"
+        )
+        got = [r["i"] for r in df.withColumn("i", polygon_gate("x", "y", square)).collect()]
+        assert got == [False, False, True]
 
     def test_ellipse_gate_rotation(self, spark):
         df = spark.createDataFrame([(3.0, 3.0), (3.0, -3.0)], "x DOUBLE, y DOUBLE")

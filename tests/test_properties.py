@@ -6,10 +6,11 @@ histogram mass conservation, dedup idempotence, as-of left-join
 cardinality, exact-sum correctness against Python's exact arithmetic.
 """
 
+import math
 from fractions import Fraction
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -69,6 +70,60 @@ def test_histogram_mass_conservation(spark, vals):
     df = spark.createDataFrame([("s", v) for v in vals], "sample_id STRING, value DOUBLE")
     hist = log_histogram(df, "value", ["sample_id"], lo=-3.0, step=0.5, n_bins=20)
     assert hist.agg(F.sum("n")).collect()[0][0] == len(vals)
+
+
+def _ray_cast_numpy(px, py, vertices):
+    """The NumPy even-odd ray-caster that polygon_gate was before it
+    became a Column expression (a null coordinate arrives as NaN)."""
+    import numpy as np
+
+    vx = np.array([v[0] for v in vertices], dtype=np.float64)
+    vy = np.array([v[1] for v in vertices], dtype=np.float64)
+    inside = np.zeros(len(px), dtype=bool)
+    j = len(vx) - 1
+    for i in range(len(vx)):
+        x1, y1, x2, y2 = vx[i], vy[i], vx[j], vy[j]
+        crosses = (y1 > py) != (y2 > py)
+        with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
+            xint = (x2 - x1) * (py - y1) / (y2 - y1) + x1
+        inside ^= crosses & (px < xint)
+        j = i
+    return inside
+
+
+# a small integer lattice makes horizontal and repeated-y edges common
+_vertex_coord = st.integers(-3, 3).map(float) | st.floats(-10, 10)
+_point_coord = _vertex_coord | st.sampled_from([math.inf, -math.inf, math.nan, -0.0, None])
+
+
+@SETTINGS
+@given(
+    vertices=st.lists(st.tuples(_vertex_coord, _vertex_coord), min_size=3, max_size=8),
+    points=st.lists(st.tuples(_point_coord, _point_coord), max_size=20),
+)
+# a -0.0 and a 0.0 vertex coordinate in one polygon (see polygon_gate)
+@example(vertices=[(0.0, -1.0), (1.0, -0.0), (0.0, 1.0), (0.0, 0.0)], points=[])
+def test_polygon_gate_matches_numpy_ray_casting(spark, vertices, points):
+    import numpy as np
+
+    from fcs_etl_reactor_spark.operators.gates import polygon_gate
+
+    edges = list(zip(vertices, vertices[-1:] + vertices[:-1]))
+    on_edges = [((x1 + x2) / 2, (y1 + y2) / 2) for (x1, y1), (x2, y2) in edges]
+    on_edges += [(x1 + (x2 - x1) / 3, y1 + (y2 - y1) / 3) for (x1, y1), (x2, y2) in edges]
+    cx, cy = on_edges[0]
+    beyond = [(math.inf, cy), (-math.inf, cy), (cx, math.inf), (cx, -math.inf),
+              (math.nan, cy), (cx, math.nan), (None, cy), (cx, None)]
+    pts = points + vertices + on_edges + beyond
+    df = spark.createDataFrame(
+        [(i, x, y) for i, (x, y) in enumerate(pts)], "i INT, x DOUBLE, y DOUBLE"
+    )
+    got = [r["inside"] for r in
+           df.select("i", polygon_gate("x", "y", vertices).alias("inside")).orderBy("i").collect()]
+    # NumPy reads None as NaN in a float64 array, as Arrow handed nulls to the UDF
+    xs, ys = (np.array(c, dtype=np.float64) for c in zip(*pts))
+    want = _ray_cast_numpy(xs, ys, vertices)
+    assert got == want.tolist()
 
 
 @SETTINGS

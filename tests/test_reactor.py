@@ -141,3 +141,98 @@ class TestSharedParseLifetime:
         # the point cloud was written (its cache built) before the failure
         assert (tmp_path / "out" / "point_cloud").exists()
         assert _persistent_rdd_ids(spark) == before
+
+
+def _count_parsed_rows(spark, monkeypatch):
+    """Route the pipeline's ingest through a pass-through mapInPandas that
+    adds every parsed row to an accumulator; return the accumulator."""
+    import fcs_etl_reactor_spark.plans.fcs_pipeline as pipeline
+
+    parsed = spark.sparkContext.accumulator(0)
+    real_read = pipeline.read_fcs_wide
+
+    def counted_read(*args, **kwargs):
+        df = real_read(*args, **kwargs)
+
+        def count(batches):
+            for pdf in batches:
+                parsed.add(len(pdf))
+                yield pdf
+
+        return df.mapInPandas(count, df.schema)
+
+    monkeypatch.setattr(pipeline, "read_fcs_wide", counted_read)
+    return parsed
+
+
+class TestConcurrentExport:
+    """The export writes its three outputs at once from a thread pool;
+    the shared cache must still hold one parse, and the caller's job
+    group and the order of ``written`` must not depend on the threads."""
+
+    N_EVENTS = 100  # the spool fixture: 2 files × 50 events
+
+    def test_one_parse_per_csv_export(self, spark, spool, tmp_path, monkeypatch):
+        parsed = _count_parsed_rows(spark, monkeypatch)
+        res = handle_message(
+            spark,
+            {"fcs_dir": spool, "channels": CHANNELS, "output_dir": str(tmp_path / "out")},
+        )
+        assert len(res["written"]) == 3
+        assert parsed.value == self.N_EVENTS
+
+    def test_one_parse_per_parquet_export(self, spark, spool, tmp_path, monkeypatch):
+        from fcs_etl_reactor_spark.plans.fcs_pipeline import run_fcs_pipeline
+
+        parsed = _count_parsed_rows(spark, monkeypatch)
+        run_fcs_pipeline(spark, spool, CHANNELS, output_path=str(tmp_path / "out"))
+        assert parsed.value == self.N_EVENTS
+        assert (tmp_path / "out" / "histogram").exists()
+
+    def test_job_group_and_written_order_survive_the_pool(
+        self, spark, spool, tmp_path, monkeypatch
+    ):
+        import threading
+        import warnings
+
+        import fcs_etl_reactor_spark.io as io_mod
+
+        # each write waits for the one after it in ``outputs`` order, so
+        # the writes end in reverse order, and only if they run at once
+        real_write = io_mod.write_csv
+        done = {n: threading.Event() for n in ("point_cloud", "stats", "histogram")}
+        waits_for = {"point_cloud": "stats", "stats": "histogram"}
+        finished = []
+
+        def write_in_reverse(df, path):
+            name = path.rsplit("/", 1)[-1]
+            if name in waits_for:
+                assert done[waits_for[name]].wait(60), "writes ran one after another"
+            real_write(df, path)
+            finished.append(name)
+            done[name].set()
+
+        monkeypatch.setattr(io_mod, "write_csv", write_in_reverse)
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        listener_bus = sc._jsc.sc().listenerBus()
+        listener_bus.waitUntilEmpty(30_000)
+        ungrouped_before = set(tracker.getJobIdsForGroup(None))
+        group = "reactor-concurrent-export"
+        out = str(tmp_path / "out")
+        sc.setJobGroup(group, "one reactor message")
+        try:
+            with warnings.catch_warnings(record=True) as caught:
+                warnings.simplefilter("always")
+                res = handle_message(
+                    spark, {"fcs_dir": spool, "channels": CHANNELS, "output_dir": out}
+                )
+        finally:
+            sc.setJobGroup(None, None)
+        listener_bus.waitUntilEmpty(30_000)
+
+        assert finished == ["histogram", "stats", "point_cloud"]
+        assert res["written"] == [f"{out}/point_cloud", f"{out}/stats", f"{out}/histogram"]
+        assert len(tracker.getJobIdsForGroup(group)) >= 3
+        assert set(tracker.getJobIdsForGroup(None)) <= ungrouped_before
+        assert not [w for w in caught if "will not be inherited" in str(w.message)]
