@@ -69,11 +69,15 @@ def train_bpe(df: DataFrame, text_col: str, n_merges: int = 8) -> list[tuple[int
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("n"))
     )
+    # LAZY checkpoint per round, as in dedup_clusters: the round's
+    # argmax collect is the materializing action (one stage reads the
+    # vocab), and the next round's merge reads the stored blocks — so
+    # the corpus and each round's vocab are computed exactly once.
     # array_remove: Spark's zero-width split keeps a trailing empty
     # match — an empty symbol would later surface as a phantom pair
     vocab = wc.select(
         F.array_remove(F.split(F.col("term"), "(?!^)"), "").alias("symbols"), "n"
-    ).persist()
+    ).localCheckpoint(eager=False)
     merges: list[tuple[int, str, str]] = []
     for rank in range(n_merges):
         top = (
@@ -86,8 +90,7 @@ def train_bpe(df: DataFrame, text_col: str, n_merges: int = 8) -> list[tuple[int
             break
         a, b = top[0]["pair"].split(" ")
         merges.append((rank, a, b))
-        new = vocab.select(_merge_symbols(a, b).alias("symbols"), "n").persist()
-        vocab.unpersist()
-        vocab = new
-    vocab.unpersist()
+        vocab = vocab.select(
+            _merge_symbols(a, b).alias("symbols"), "n"
+        ).localCheckpoint(eager=False)
     return merges

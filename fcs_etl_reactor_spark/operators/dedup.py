@@ -16,6 +16,7 @@ Scale design (the 100 TB rule: never materialize O(n²)):
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -364,7 +365,6 @@ def lsh_shard_runs(
     bands: int = 16,
     n_shards: int = 4,
     shard_expr=None,
-    materialize: bool | str = False,
 ) -> list[tuple[int, int, DataFrame]]:
     """The sharded deployment shape of minhash_lsh_pairs: partition the
     corpus into `n_shards` disjoint shards and return the K·(K+1)/2
@@ -397,30 +397,24 @@ def lsh_shard_runs(
     clustered id spaces; pass e.g. `F.col(id) % K` when the shard
     decision must be replayable in plain SQL (the q9y oracle).
 
-    `materialize` selects how the banded rows are shared across the
-    K(K+1)/2 run branches (Spark unions share no common
-    subexpressions, so the default re-plans the shingle→signature
-    subtree into every branch):
+    The banded rows are persisted MEMORY_AND_DISK and shared by the
+    K(K+1)/2 run branches: Spark unions share no common
+    subexpressions, so without it every branch re-plans the
+    shingle→signature subtree. The InMemoryRelation keeps the child
+    plan's statistics, so join strategies are unchanged (an eager
+    localCheckpoint was measured to LOSE at sf0.1, 7.8 s lazy vs
+    11.6 s: the LogicalRDD drops size statistics and every band-bucket
+    join degrades broadcast→SMJ), while the ~2K subtree executions
+    collapse to one (q9y union at sf0.1: 16.6→11.4 s and 12.2→10.9 s
+    total on two box states).
 
-    - False (default for the deployment list form): lazy — each run
-      branch re-executes the subtree.
-    - True: eager localCheckpoint. Measured r11: LOSES at sf0.1
-      (7.8 s lazy vs 11.6 s) because the LogicalRDD drops size
-      statistics and every band-bucket join degrades broadcast→SMJ.
-    - "persist" (round 12, the in-plan union's mode): MEMORY_AND_DISK
-      persist — the InMemoryRelation keeps the child plan's
-      statistics so join strategies are unchanged, while the ~2K
-      subtree executions collapse to one (q9y union at sf0.1 measured
-      16.6→11.4 s and 12.2→10.9 s total on two box states — never
-      worse, and the saved execution count grows with the corpus).
-      Lifetime caveat, eyes open: Dataset.persist registers in the
-      session's CacheManager, which holds the entry until
-      unpersist()/clearCache() — this operator has no lazy unpersist
-      hook, so each call pins its band rows (a few MB at sf0.1) for
-      the session. Bounded and derived (NOT the round-1 q10 class,
-      which cached unbounded base scans); moot in the driver's
-      one-shot process. Long-lived sessions calling this repeatedly
-      should pass False or clear the cache themselves.
+    Lifetime caveat: Dataset.persist registers in the session's
+    CacheManager, which holds the entry until unpersist()/clearCache()
+    — this operator has no lazy unpersist hook, so each call pins its
+    band rows (a few MB at sf0.1) for the session. Bounded and derived
+    (NOT the round-1 q10 class, which cached unbounded base scans);
+    moot in a one-shot process. Long-lived sessions calling this
+    repeatedly should unpersist or clear the cache themselves.
 
     The real cure at scale is still not an in-plan boundary at all:
     the deployment (scripts/sharded_dedup_probe.py) writes
@@ -432,16 +426,7 @@ def lsh_shard_runs(
         shard_expr = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards))
     band_rows = minhash_band_rows(df, id_col, text_col, n, num_perm, bands)
     band_rows = band_rows.withColumn("__shard", shard_expr.cast("int"))
-    if isinstance(materialize, str) and materialize != "persist":
-        raise ValueError(
-            f"materialize={materialize!r}: expected False, True, or 'persist'"
-        )
-    if materialize == "persist":
-        from pyspark import StorageLevel
-
-        band_rows = band_rows.persist(StorageLevel.MEMORY_AND_DISK)
-    elif materialize:
-        band_rows = band_rows.localCheckpoint(eager=True)
+    band_rows = band_rows.persist(StorageLevel.MEMORY_AND_DISK)
     runs = []
     for i in range(n_shards):
         rows_i = band_rows.filter(F.col("__shard") == i).drop("__shard")
@@ -463,7 +448,6 @@ def minhash_lsh_pairs_sharded(
     bands: int = 16,
     n_shards: int = 4,
     shard_expr=None,
-    materialize: bool | str = False,
 ) -> DataFrame:
     """Union of the lsh_shard_runs — exactly equal (rows AND n_bands)
     to minhash_lsh_pairs; the in-plan form used by the q9y losslessness
@@ -471,8 +455,7 @@ def minhash_lsh_pairs_sharded(
     (see lsh_shard_runs); this union exists to make the equality a
     checkable single plan."""
     runs = lsh_shard_runs(
-        df, id_col, text_col, n, num_perm, bands, n_shards, shard_expr,
-        materialize,
+        df, id_col, text_col, n, num_perm, bands, n_shards, shard_expr
     )
     out = runs[0][2]
     for _, _, pairs in runs[1:]:
@@ -606,25 +589,17 @@ def dedup_clusters(
     # verify for q5b/q6e) twice before the checkpoint below could help
     e = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     edges = symmetrize(e, "a", "b", "a", "b").distinct()
-    try:
-        # materialize the edge set ONCE: it is joined every round, and
-        # without this each round's join + convergence sum re-executes
-        # the whole upstream pair pipeline (LSH banding + exact verify
-        # for q5b/q6e — measured ~2 full recomputes per round). LAZY +
-        # count() as the materializing action (round-12 fold): the one
-        # count job pins the blocks AND detects the empty graph, which
-        # skips the label rounds outright — above-threshold pair sets
-        # are often empty (q6t at sf0.1), and each round costs two
-        # shuffles of fixed overhead even on zero rows.
-        edges = edges.localCheckpoint(eager=False)
-        _ckpt_ok = True
-    except Exception:
-        _ckpt_ok = False  # materialization is an optimization only
-    # the empty-graph probe is free ONLY when it doubles as the
-    # checkpoint's materializing action; without a checkpoint (Spark
-    # Connect fallback) it would re-execute the whole upstream once
-    # just to test emptiness, so skip it there
-    if _ckpt_ok and edges.count() == 0:
+    # materialize the edge set ONCE: it is joined every round, and
+    # without this each round's join + convergence sum re-executes the
+    # whole upstream pair pipeline (LSH banding + exact verify for
+    # q5b/q6e — measured ~2 full recomputes per round). LAZY + count()
+    # as the materializing action (round-12 fold): the one count job
+    # pins the blocks AND detects the empty graph, which skips the
+    # label rounds outright — above-threshold pair sets are often
+    # empty (q6t at sf0.1), and each round costs two shuffles of fixed
+    # overhead even on zero rows.
+    edges = edges.localCheckpoint(eager=False)
+    if edges.count() == 0:
         return edges.select(
             F.col("a").alias("node"),
             F.col("a").alias("cluster_id"),
@@ -651,19 +626,16 @@ def dedup_clusters(
                 ).alias("label"),
             )
         )
-        try:
-            # truncate lineage per round (same hygiene as the star
-            # path): without it, round k's plan nests k joins deep and
-            # analysis time grows superlinearly with the diameter.
-            # LAZY checkpoint: the convergence aggregate below is the
-            # materializing action, so one job per round computes the
-            # new labels, persists them, AND returns the label sum —
-            # instead of an eager checkpoint job followed by a separate
-            # convergence-collect job (round-12 fold; the next round's
-            # two label reads hit the persisted blocks).
-            labels = labels.localCheckpoint(eager=False)
-        except Exception:
-            pass
+        # truncate lineage per round (same hygiene as the star path):
+        # without it, round k's plan nests k joins deep and analysis
+        # time grows superlinearly with the diameter. LAZY checkpoint:
+        # the convergence aggregate below is the materializing action,
+        # so one job per round computes the new labels, persists them,
+        # AND returns the label sum — instead of an eager checkpoint
+        # job followed by a separate convergence-collect job (round-12
+        # fold; the next round's two label reads hit the persisted
+        # blocks).
+        labels = labels.localCheckpoint(eager=False)
         cur_sum = labels.agg(F.sum("label")).first()[0]
         if cur_sum == prev_sum:
             break
@@ -748,22 +720,16 @@ def dedup_clusters_star(
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    try:
-        # materialize the initial edge set: round 0's large-star reads
-        # it twice (both union branches), so without this the upstream
-        # pair pipeline (q6t's vectorized scorer, q5f's LSH + verify)
-        # executes twice before the per-round checkpoints take over.
-        # LAZY + count() as the materializing action (round-12 fold):
-        # one job pins the blocks AND detects the empty graph, which
-        # skips the contraction rounds outright (q6t at sf0.1 finds no
-        # above-threshold pairs yet paid two rounds of fixed overhead).
-        e = e.localCheckpoint(eager=False)
-        _ckpt_ok = True
-    except Exception:
-        _ckpt_ok = False  # materialization is an optimization only
-    # same guard as dedup_clusters: the empty probe is free only as
-    # the checkpoint's materializing action
-    if _ckpt_ok and e.count() == 0:
+    # materialize the initial edge set: round 0's large-star reads it
+    # twice (both union branches), so without this the upstream pair
+    # pipeline (q6t's vectorized scorer, q5f's LSH + verify) executes
+    # twice before the per-round checkpoints take over. LAZY + count()
+    # as the materializing action (round-12 fold): one job pins the
+    # blocks AND detects the empty graph, which skips the contraction
+    # rounds outright (q6t at sf0.1 finds no above-threshold pairs yet
+    # paid two rounds of fixed overhead).
+    e = e.localCheckpoint(eager=False)
+    if e.count() == 0:
         return e.select(
             F.col("b").alias("node"),
             F.col("a").alias("cluster_id"),
@@ -772,16 +738,13 @@ def dedup_clusters_star(
     prev_sig = None
     for _ in range(max_iter):
         e = _small_star(_large_star(e))
-        try:
-            # LAZY checkpoint + the signature aggregate as the
-            # materializing action: one job per round computes the
-            # contracted edge set, persists it, and returns the
-            # (count, xor) signature — the eager-checkpoint-then-agg
-            # form paid two jobs per round (round-12 fold). The next
-            # round's two union-branch reads hit the persisted blocks.
-            e = e.localCheckpoint(eager=False)
-        except Exception:
-            pass  # checkpointing is an optimization, not a correctness need
+        # LAZY checkpoint + the signature aggregate as the
+        # materializing action: one job per round computes the
+        # contracted edge set, persists it, and returns the (count,
+        # xor) signature — the eager-checkpoint-then-agg form paid two
+        # jobs per round (round-12 fold). The next round's two
+        # union-branch reads hit the persisted blocks.
+        e = e.localCheckpoint(eager=False)
         row = e.agg(
             F.count(F.lit(1)).alias("n"),
             F.expr("bit_xor(xxhash64(a, b))").alias("h"),

@@ -8,9 +8,7 @@ Both operators are built for oracle parity AND web scale:
   arithmetic — every per-iteration op is an IEEE double op on
   integer-valued inputs below 2^53 followed by a floor, bit-identical
   in any engine at any partitioning. Out-degree rides with the edge
-  rows so an iteration is one join + one groupBy. Iteration state is
-  MATERIALIZED each round via eager localCheckpoint (see
-  ``materialize``) — the MLlib-style checkpoint cadence.
+  rows so an iteration is one join + one groupBy.
 - ``oriented_triangles`` / ``triangle_count``: DEGREE-ORIENTED wedge
   join — each undirected edge directed from its lower-(deg, id)
   endpoint, so per-vertex wedge fanout is the out-degree, O(√m) on any
@@ -18,6 +16,23 @@ Both operators are built for oracle parity AND web scale:
   orientation 1.4×). ``oriented_triangles`` lists each triangle's
   corner triple exactly once (q1k's per-node tallies fan out of it);
   ``triangle_count`` reduces the listing to one (count, edges) row.
+
+Every iterative operator here calls ``localCheckpoint`` on its round
+state — the cadence MLlib uses for ALS/GraphX. Without it a k-round
+loop hands AQE one deep plan whose stages materialize CONCURRENTLY:
+on a vanilla 1g local[16] heap, three 3-iteration graph queries run
+back-to-back die with a Java-heap OOM, while per-round checkpointing
+runs each round as a small sequential job. It also truncates lineage,
+so earlier rounds' shuffle files become collectable. Values are
+unchanged: the arithmetic is exact fixed-point. A failed checkpoint
+job fails the call.
+
+``localCheckpoint(eager=False)`` truncates the plan at once but defers
+the block persist to the next action over the frame. The sites that
+use it follow it with a per-round aggregate (node count, renorm max,
+convergence sum), so ONE job both materializes the state and computes
+the aggregate. Precondition at every lazy site: that action runs
+before two stages read the frame.
 """
 
 from __future__ import annotations
@@ -27,35 +42,6 @@ from pyspark.sql import functions as F
 
 PR_SCALE = 1_000_000_000_000  # 1e12 fixed-point
 DAMP_NUM, DAMP_DEN = 85, 100  # d = 0.85 in exact integer arithmetic
-
-
-def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
-    """localCheckpoint iteration state — the standard cadence for
-    iterative algorithms (MLlib checkpoints ALS/GraphX the same
-    way). Without it a k-iteration loop hands AQE one deep plan whose
-    stages materialize CONCURRENTLY: measured on a vanilla 1g
-    local[16] heap, three 3-iteration graph queries run back-to-back
-    die with a Java-heap OOM mid-materialization, while per-round
-    checkpointing runs each round as a small sequential job and the
-    same sequence completes. Also truncates lineage, so earlier
-    rounds' shuffle files become collectable instead of pinned by the
-    growing plan. Values are unchanged — the arithmetic is exact
-    fixed-point, so materialization cannot perturb results. Falls
-    back to the lazy plan where checkpointing is unavailable (e.g.
-    Spark Connect).
-
-    ``eager=False`` truncates the logical plan immediately but defers
-    the block persist to the caller's next action over the frame — use
-    it when a per-round aggregate (convergence signature, renorm max)
-    follows directly, so that ONE job both materializes the round
-    state and computes the aggregate instead of paying a separate
-    checkpoint job (round-12 fold). The caller must guarantee such an
-    action runs before the frame is read concurrently from two
-    stages."""
-    try:
-        return df.localCheckpoint(eager=eager)
-    except Exception:
-        return df
 
 
 def symmetrize(
@@ -98,7 +84,7 @@ def pagerank(edges: DataFrame, iters: int = 3) -> DataFrame:
     edges_w = edges.withColumn(
         "outdeg", F.count(F.lit(1)).over(WindowSpec.partitionBy("src"))
     )
-    edges_w = materialize(edges_w)
+    edges_w = edges_w.localCheckpoint()
     # node set from the CHECKPOINTED edge rows, exploded in one pass —
     # the union-of-two-selects form planned the caller's raw edge
     # derivation into both branches and executed it twice (round-12;
@@ -120,7 +106,7 @@ def pagerank(edges: DataFrame, iters: int = 3) -> DataFrame:
     # action (round-12 fold).
     import math
 
-    nodes = materialize(nodes, eager=False)
+    nodes = nodes.localCheckpoint(eager=False)
     n_nodes = nodes.count()
     if n_nodes == 0:
         return nodes.select("node", F.lit(0).cast("bigint").alias("rank_scaled"))
@@ -155,7 +141,7 @@ def pagerank(edges: DataFrame, iters: int = 3) -> DataFrame:
                 ).alias("r"),
             )
         )
-        ranks = materialize(ranks)
+        ranks = ranks.localCheckpoint()
     return ranks.select("node", F.col("r").alias("rank_scaled"))
 
 
@@ -279,7 +265,7 @@ def hits_fixed_point(edges: DataFrame, iters: int) -> tuple[DataFrame, DataFrame
     # edges is read 2x per round (+ the seed distinct); materialize it
     # once like pagerank does — otherwise the caller's upstream edge
     # derivation re-executes 2*iters+1 times
-    edges = materialize(edges)
+    edges = edges.localCheckpoint()
     h = edges.select(F.col("src").alias("node")).distinct().withColumn(
         "h", F.lit(s).cast("bigint")
     )
@@ -299,7 +285,7 @@ def hits_fixed_point(edges: DataFrame, iters: int) -> tuple[DataFrame, DataFrame
         # fold). The renormalize join then reads persisted blocks, so
         # a/h stay shallow two-node plans and need no checkpoint of
         # their own.
-        ar = materialize(ar, eager=False)
+        ar = ar.localCheckpoint(eager=False)
         am = ar.agg(F.max("a").alias("am"))
         a = ar.join(F.broadcast(am)).select(
             F.col("dst").alias("node"),
@@ -310,7 +296,7 @@ def hits_fixed_point(edges: DataFrame, iters: int) -> tuple[DataFrame, DataFrame
             .groupBy("src")
             .agg(F.sum("a").alias("hsum"))
         )
-        hr = materialize(hr, eager=False)
+        hr = hr.localCheckpoint(eager=False)
         hm = hr.agg(F.max("hsum").alias("hm"))
         h = hr.join(F.broadcast(hm)).select(
             F.col("src").alias("node"),
@@ -356,7 +342,7 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     fixed round count is the bounded-latency filter form (q1h)."""
     # round 0 reads the input 3x (degree count + both semi joins);
     # materialize it once, same cadence as the per-round state below
-    edges = materialize(edges)
+    edges = edges.localCheckpoint()
     for _ in range(rounds):
         deg = (
             edges.select(F.col("a").alias("node"))
@@ -366,10 +352,10 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
             .filter(F.col("deg") >= k)
             .select("node")
         )
-        edges = materialize(
-            edges.join(deg.withColumnRenamed("node", "a"), "a", "leftsemi").join(
-                deg.withColumnRenamed("node", "b"), "b", "leftsemi"
-            )
+        edges = (
+            edges.join(deg.withColumnRenamed("node", "a"), "a", "leftsemi")
+            .join(deg.withColumnRenamed("node", "b"), "b", "leftsemi")
+            .localCheckpoint()
         )
     return edges
 
@@ -397,8 +383,8 @@ def bfs_hops(und: DataFrame, max_hops: int) -> DataFrame:
     """Single-source BFS hop distances (unweighted SSSP), Pregel
     style: each round expands the current distance set across the
     edge list (one shuffle on the node id) and re-minimizes, with the
-    round state materialized via ``materialize`` — frontier-bounded,
-    no driver collect of row data, iteration-capped by construction.
+    round state localCheckpointed — frontier-bounded, no driver
+    collect of row data, iteration-capped by construction.
 
     `und` is the undirected edge list as (src, dst) with both
     directions present. The source is the smallest node id present —
@@ -409,7 +395,7 @@ def bfs_hops(und: DataFrame, max_hops: int) -> DataFrame:
     one |E| join partial-aggregated on dst. Distances are INTs; MIN
     over ints is order-independent, so the result is partition- and
     engine-invariant."""
-    und = materialize(und)
+    und = und.localCheckpoint()
     dist = (
         und.agg(F.min("src").alias("node"))
         .withColumn("d", F.lit(0).cast("int"))
@@ -419,8 +405,11 @@ def bfs_hops(und: DataFrame, max_hops: int) -> DataFrame:
             dist.join(und, dist["node"] == und["src"])
             .select(F.col("dst").alias("node"), (F.col("d") + 1).alias("d"))
         )
-        dist = materialize(
-            dist.unionAll(nxt).groupBy("node").agg(F.min("d").alias("d"))
+        dist = (
+            dist.unionAll(nxt)
+            .groupBy("node")
+            .agg(F.min("d").alias("d"))
+            .localCheckpoint()
         )
     return dist
 
@@ -435,15 +424,14 @@ def label_propagation(und: DataFrame, rounds: int) -> DataFrame:
     reproducible by design). Per round: one shuffle (edges ⋈ labels on
     dst, groupBy(src, label) with map-side partial counts) plus a
     window PARTITIONED BY src — vote lists bounded by degree, never a
-    global window; round state localCheckpointed via ``materialize``
-    (the iterative-graph cadence). Nodes appear iff they touch an
-    edge, so every node has >= 1 neighbor and the plurality argmax is
-    total."""
+    global window; round state localCheckpointed (the iterative-graph
+    cadence). Nodes appear iff they touch an edge, so every node has
+    >= 1 neighbor and the plurality argmax is total."""
     if rounds < 1:
         raise ValueError(f"label_propagation requires rounds >= 1, got {rounds}")
     # one-pass symmetrization (see symmetrize): the unionAll form
-    # executed the caller's edge derivation twice in the materialize job
-    adj = materialize(symmetrize(und, "a", "b", "src", "dst"))
+    # executed the caller's edge derivation twice in the checkpoint job
+    adj = symmetrize(und, "a", "b", "src", "dst").localCheckpoint()
     labels = (
         adj.select(F.col("src").alias("node"))
         .distinct()
@@ -458,10 +446,11 @@ def label_propagation(und: DataFrame, rounds: int) -> DataFrame:
             .groupBy("src", "label")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        labels = materialize(
+        labels = (
             votes.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select(F.col("src").alias("node"), "label")
+            .localCheckpoint()
         )
     return labels
 

@@ -63,19 +63,10 @@ _EXPENSIVE_NODES = (
     "Deduplicate", "Union", "CoGroup",
 )
 
-#: NON-DETERMINISTIC across re-executions: the multi-pass boundary/
-#: offsets/assignment jobs must agree on the exact row set, which only
-#: a LINEAGE-TRUNCATING materialization guarantees (a lineage-retaining
-#: persist can recompute a lost block to a DIFFERENT row set) — these
-#: always localCheckpoint regardless of the configured mode. Substring
-#: match over the optimized-plan string; a match triggered by a data
-#: literal (a filter on the text "rand(") only costs an unnecessary
-#: materialization, never a missed one, so false positives are safe.
-_NONDETERMINISTIC_MARKS = (
-    "Limit", "Sample", "Offset", "Tail",
-    "rand(", "randn(", "uuid(", "monotonically_increasing_id",
-    "shuffle(", "spark_partition_id", "input_file",
-)
+#: row-set nodes Catalyst reports as deterministic although a
+#: re-execution can return a different row set (which rows a limit,
+#: sample, offset or tail keeps depends on partition order).
+_ROW_SET_NODES = ("Limit", "Sample", "Offset", "Tail")
 
 
 def _materialize_multipass_input(df: DataFrame) -> DataFrame:
@@ -83,58 +74,29 @@ def _materialize_multipass_input(df: DataFrame) -> DataFrame:
     multi-pass ordering (approxQuantile boundary job + per-bucket
     offsets job + the ranked execution), CONDITIONALLY:
 
-    - a bare scan/filter/project upstream is returned as-is — cheaper
-      to re-scan than to store (column pruning / predicate pushdown
-      still reach the scan on every pass);
+    - a deterministic bare scan/filter/project upstream is returned
+      as-is — cheaper to re-scan than to store (column pruning /
+      predicate pushdown still reach the scan on every pass);
     - an upstream that is already a materialized RDD (LogicalRDD from
       an earlier checkpoint) is returned as-is;
-    - anything with a shuffle/aggregate/Python stage is stored once.
+    - anything else is stored once with an eager ``localCheckpoint``.
 
-    Storage mode is selected by the session conf
-    ``spark.fcs_etl.materialize.mode``:
-
-    - ``local`` (default): ``localCheckpoint`` — fastest, but blocks
-      live unreplicated on executors, so an executor loss kills the
-      job. The right default for this repo's single-process bench.
-    - ``persist_disk``: ``persist(StorageLevel.DISK_ONLY_2)`` — blocks
-      on disk with a second replica, so the multi-pass plan survives a
-      lost executor (recompute falls back to lineage, which persist —
-      unlike checkpoint — retains). The cluster/fault-tolerant mode
-      for DETERMINISTIC upstreams; a plan containing a
-      non-deterministic node (limit/sample/rand/...) still gets
-      localCheckpoint even in this mode, because a lineage recompute
-      of a twice-lost block could rebuild a DIFFERENT row set and
-      silently misalign the passes — fail-stop beats silent
-      corruption there.
-    - ``none``: never materialize (the pre-r11 behavior; every pass
-      re-executes the upstream).
+    Non-deterministic upstreams (a ``rand``, ``spark_partition_id``,
+    non-deterministic UDF — anything the optimized plan's
+    ``deterministic`` flag rejects — or a limit/sample/offset/tail)
+    are always checkpointed: the boundary, offsets and assignment
+    passes must see the exact same row set, and a re-execution could
+    rebuild a different one. Clock functions are not caught: the
+    optimizer folds ``current_timestamp()`` into a literal before
+    either check sees it. A failed checkpoint job fails the call.
     """
-    mode = "local"
-    try:
-        mode = df.sparkSession.conf.get("spark.fcs_etl.materialize.mode", "local")
-    except Exception:
-        pass
-    if mode == "none":
-        return df
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-    except Exception:
-        plan = None
-    nondet = plan is None or any(n in plan for n in _NONDETERMINISTIC_MARKS)
-    if (
-        plan is not None
-        and not nondet
-        and not any(n in plan for n in _EXPENSIVE_NODES)
+    optimized = df._jdf.queryExecution().optimizedPlan()
+    plan = optimized.toString()
+    if optimized.deterministic() and not any(
+        n in plan for n in _ROW_SET_NODES + _EXPENSIVE_NODES
     ):
         return df
-    try:
-        if mode == "persist_disk" and not nondet:
-            from pyspark import StorageLevel
-
-            return df.persist(StorageLevel.DISK_ONLY_2)
-        return df.localCheckpoint(eager=True)
-    except Exception:
-        return df  # materialization is an optimization, not a need
+    return df.localCheckpoint(eager=True)
 
 
 def _numeric_surrogate(df: DataFrame, key: Column) -> Column:
@@ -239,10 +201,9 @@ def global_rank(
     calls (q3f's three NTILE axes, q1o's two rank passes) re-execute
     every earlier rank's shuffle+assignment inside every later rank's
     build jobs, a quadratic recompute stack (measured: q3f 8.0 →
-    2.6 s cold at sf0.1). Round 12 made the materialization CONDITIONAL
-    (bare-scan upstreams re-scan instead — cheaper than storing them,
-    at any scale) and mode-selectable (persist_disk for cluster fault
-    tolerance); see _materialize_multipass_input."""
+    2.6 s cold at sf0.1). The materialization is CONDITIONAL:
+    deterministic bare-scan upstreams re-scan instead — cheaper than
+    storing them, at any scale; see _materialize_multipass_input."""
     df = _materialize_multipass_input(df)
     n_parts = int(
         num_partitions

@@ -246,10 +246,6 @@ def q9y_sharded_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands=16,
         n_shards=4,
         shard_expr=F.col("doc_id") % 4,
-        # share ONE banded-rows computation across the 10 run branches
-        # (stats-preserving persist — round 12; see lsh_shard_runs):
-        # the lazy union re-executed the shingle→signature subtree ~20×
-        materialize="persist",
     )
     verified = jaccard_verify_pairs(
         d, cands, "doc_id", "text", n=3, threshold=_NEARDUP_J

@@ -3,12 +3,12 @@
 PageRank is the canonical "iterative algorithm the engine must not
 fake": each iteration is edges ⋈ ranks (shuffle on src) followed by a
 groupBy(dst) — the textbook distributed formulation. Iteration state
-is materialized per round via eager localCheckpoint
-(operators/graphs.materialize — the MLlib checkpoint cadence): each
-round runs as a small sequential job instead of one deep plan whose
-stages AQE materializes concurrently (measured OOM on a vanilla 1g
-heap), and lineage truncation lets earlier rounds' shuffles be
-cleaned. No driver-side collect of row data anywhere.
+is localCheckpointed per round (the MLlib checkpoint cadence; see
+operators/graphs.py): each round runs as a small sequential job
+instead of one deep plan whose stages AQE materializes concurrently
+(measured OOM on a vanilla 1g heap), and lineage truncation lets
+earlier rounds' shuffles be cleaned. No driver-side collect of row
+data anywhere.
 
 Determinism strategy (oracle parity): ranks are FIXED-POINT longs
 (scale 1e12). Every per-iteration op — FLOOR(r/outdeg) contribution,
@@ -35,7 +35,6 @@ from fcs_etl_reactor_spark.io import load
 from fcs_etl_reactor_spark.queries import query
 
 from fcs_etl_reactor_spark.operators.graphs import (
-    materialize,
     DAMP_DEN as _DAMP_DEN,
     DAMP_NUM as _DAMP_NUM,
     PR_SCALE as _PR_SCALE,
@@ -176,7 +175,6 @@ def q5o_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     own cap (min_shared pre-filter or k-core peel first)."""
     from fcs_etl_reactor_spark.operators.graphs import (
         copurchase_pairs,
-        materialize,  # noqa: F401 — shared family import pattern
         triangle_count,
     )
 
@@ -240,7 +238,7 @@ def q5r_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pairs = copurchase_pairs(l).select("a", "b")
     # one-pass symmetrization: the unionAll form executed the
-    # co-purchase self-join twice inside bfs_hops' materialize job
+    # co-purchase self-join twice inside bfs_hops' checkpoint job
     und = symmetrize(pairs, "a", "b", "src", "dst")
     dist = bfs_hops(und, _BFS_HOPS)
     return dist.groupBy(F.col("d").cast("int").alias("hop")).agg(
@@ -481,12 +479,12 @@ def q5s_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     wcol = (F.lit(6) - F.least(F.col("n_orders"), F.lit(5))).cast("int")
     # one-pass symmetrization: the unionAll form executed the
-    # co-purchase self-join twice inside the materialize job
+    # co-purchase self-join twice inside the checkpoint job
     und = symmetrize(
         pairs.select("a", "b", wcol.alias("w")), "a", "b", "src", "dst",
         carry=["w"],
     )
-    und = materialize(und)
+    und = und.localCheckpoint()
     dist = (
         und.agg(F.min("src").alias("node"))
         .withColumn("d", F.lit(0).cast("int"))
@@ -495,8 +493,11 @@ def q5s_bellman_ford(spark: SparkSession, sf_dir: str) -> DataFrame:
         nxt = dist.join(und, dist["node"] == und["src"]).select(
             F.col("dst").alias("node"), (F.col("d") + F.col("w")).alias("d")
         )
-        dist = materialize(
-            dist.unionAll(nxt).groupBy("node").agg(F.min("d").alias("d"))
+        dist = (
+            dist.unionAll(nxt)
+            .groupBy("node")
+            .agg(F.min("d").alias("d"))
+            .localCheckpoint()
         )
     return dist.groupBy(F.col("d").cast("int").alias("dist")).agg(
         F.count(F.lit(1)).alias("n_nodes")
@@ -779,7 +780,7 @@ def q5x_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from fcs_etl_reactor_spark.operators.graphs import hits_fixed_point
 
-    edges = materialize(edges)
+    edges = edges.localCheckpoint()
     a, h = hits_fixed_point(edges, iters=_HITS_ITERS)
     topa = (
         a.orderBy(F.col("a").desc(), "node")
@@ -801,8 +802,8 @@ def q5x_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rounds; the true k-core is this loop run to fixed point and a
 # 3-round peel is already a strict, useful filter at any scale). Each
 # round is one degree count over the surviving edge list + two semi
-# joins; round state is materialized (operators/graphs.materialize),
-# the same checkpoint cadence as the other iterative graph queries.
+# joins; round state is localCheckpointed (operators/graphs.py), the
+# same checkpoint cadence as the other iterative graph queries.
 # All arithmetic is integer counting — partition- and engine-
 # invariant by construction; the oracle unrolls the identical rounds
 # as a CTE chain.
@@ -853,14 +854,14 @@ def _kcore_oracle(k: int = _KCORE_K, rounds: int = _KCORE_ROUNDS) -> str:
 def q1h_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from fcs_etl_reactor_spark.operators.graphs import (
         copurchase_pairs,
-        materialize,
+        kcore_peel,
     )
 
-    from fcs_etl_reactor_spark.operators.graphs import kcore_peel
-
     li = load(spark, sf_dir, "lineitem")
-    edges = materialize(
-        copurchase_pairs(li, min_shared=_KCORE_MIN_SHARED).select("a", "b")
+    edges = (
+        copurchase_pairs(li, min_shared=_KCORE_MIN_SHARED)
+        .select("a", "b")
+        .localCheckpoint()
     )
     edges = kcore_peel(edges, k=_KCORE_K, rounds=_KCORE_ROUNDS)
     nodes = (
@@ -1422,12 +1423,11 @@ def _ra_link_prediction(
     the min_shared the wedge-budget ladder picked for `budget`)."""
     from fcs_etl_reactor_spark.operators.graphs import (
         copurchase_pairs,
-        materialize,
         wedge_budget_min_shared,
     )
 
     li = load(spark, sf_dir, "lineitem")
-    support = materialize(copurchase_pairs(li, min_shared=2))
+    support = copurchase_pairs(li, min_shared=2).localCheckpoint()
     ms = wedge_budget_min_shared(support, _RA_MIN_SHARED_LADDER, budget)
     und = support.filter(F.col("n_orders") >= ms).select("a", "b")
     adj = und.select(F.col("a").alias("w"), F.col("b").alias("u")).unionAll(
@@ -1554,7 +1554,7 @@ def q1z_link_prediction_budgeted(spark: SparkSession, sf_dir: str) -> DataFrame:
 # groupBy(src, label) with map-side partial counts); the plurality
 # argmax is a window PARTITIONED BY src (per-node vote lists bounded
 # by degree — never a global window); round state is localCheckpointed
-# via `materialize` like every iterative algorithm in this module.
+# like every iterative algorithm in this module.
 # Output contract: CAPPED — top-20 communities by (size desc, label),
 # a TakeOrderedAndProject, never the full node→community map.
 # --------------------------------------------------------------------------

@@ -501,10 +501,7 @@ def _pi_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it ~10 times and a lazy mapInPandas build would re-run the
     # corpus matmul on every reference (measured 66 s vs 1.5 s at
     # sf0.1 for the two-chain q8f)
-    try:
-        return g.localCheckpoint(eager=True)
-    except Exception:
-        return g
+    return g.localCheckpoint(eager=True)
 
 
 _PI_GRAM_CTES = """x AS (
@@ -1145,8 +1142,6 @@ def _pca2_oracle(iters: int = _PI_ITERS) -> str:
 def q8f_pca_deflation(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = _pi_gram(spark, sf_dir)
 
-    from fcs_etl_reactor_spark.operators.graphs import materialize
-
     def iterate(gram, v_init):
         # each round's (v, nrm) is referenced several times downstream
         # (next round, deflation, final join) — materialize the 64-row
@@ -1159,19 +1154,17 @@ def q8f_pca_deflation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .groupBy("i")
                 .agg(fsum(F.col("g") * F.col("vj"), "wi", scale=1e9))
             )
-            nrm = materialize(
-                w.agg(
-                    F.sqrt(
-                        fsum(F.col("wi") * F.col("wi"), "s", scale=1e9).cast(
-                            "double"
-                        )
-                    ).alias("nrm")
-                )
-            )
-            v = materialize(
-                w.crossJoin(F.broadcast(nrm)).select(
+            nrm = w.agg(
+                F.sqrt(
+                    fsum(F.col("wi") * F.col("wi"), "s", scale=1e9).cast("double")
+                ).alias("nrm")
+            ).localCheckpoint()
+            v = (
+                w.crossJoin(F.broadcast(nrm))
+                .select(
                     F.col("i").alias("j"), (F.col("wi") / F.col("nrm")).alias("vj")
                 )
+                .localCheckpoint()
             )
         return v, nrm
 

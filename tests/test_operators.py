@@ -70,6 +70,43 @@ class TestCompensation:
         assert row["comp_c1"] == 10.0 - 2.0  # 1.0*10 - 0.5*4
         assert row["comp_c2"] == -2.5 + 4.0  # -0.25*10 + 1.0*4
 
+    def test_signed_zero_matrix_with_nonfinite_events(self, spark, tmp_path):
+        """A matrix holding both 0.0 and -0.0 in one column, over events
+        with ±inf/NaN, read through parquet so codegen (not
+        ConvertToLocalRelation) evaluates the projection: every output
+        equals the same left-to-right sum in Python, sign of zero
+        included (Spark 4.1 subexpression elimination mixes up the two
+        zero literals elsewhere)."""
+        import math
+
+        inf, nan = float("inf"), float("nan")
+        matrix = [[1.0, 0.0, -0.5], [-0.0, 1.0, 0.0], [0.25, -0.0, 1.0]]
+        events = [
+            (1.0, -1.0, 2.0), (0.0, -0.0, 0.0), (-0.0, 0.0, -0.0),
+            (inf, 1.0, -1.0), (-inf, -0.0, 0.0), (1.0, inf, -0.0),
+            (nan, 0.0, 1.0), (0.0, -inf, nan), (-1.0, -1.0, -1.0),
+        ]
+        path = str(tmp_path / "events.parquet")
+        schema = "c0 DOUBLE, c1 DOUBLE, c2 DOUBLE"
+        spark.createDataFrame(events, schema).coalesce(1).write.parquet(path)
+        cols = ["c0", "c1", "c2"]
+        out = compensate(spark.read.parquet(path), cols, matrix, keep=cols)
+
+        def same(x, y):
+            if math.isnan(x) or math.isnan(y):
+                return math.isnan(x) and math.isnan(y)
+            return x == y and math.copysign(1.0, x) == math.copysign(1.0, y)
+
+        rows = out.collect()
+        assert len(rows) == len(events)
+        for r in rows:
+            ev = [r[c] for c in cols]
+            for i, c in enumerate(cols):
+                want = matrix[i][0] * ev[0]
+                for j in range(1, len(cols)):
+                    want = want + matrix[i][j] * ev[j]
+                assert same(r[f"comp_{c}"], want), (ev, c, r[f"comp_{c}"], want)
+
 
 class TestDedup:
     def _docs(self, spark):
@@ -428,6 +465,58 @@ class TestGlobalRank:
         df = spark.range(0, 10).select(F.col("id"))
         with pytest.raises(TypeError, match="desc"):
             global_rank(df, [F.col("id").desc()], num_partitions=2)
+
+    def test_multipass_input_materialized_only_when_needed(self, spark, tmp_path):
+        """A non-deterministic upstream over a bare scan is checkpointed
+        (the passes must see one row set); a deterministic scan+filter
+        is re-scanned as-is."""
+        from fcs_etl_reactor_spark.operators.ordering import (
+            _materialize_multipass_input,
+        )
+
+        path = str(tmp_path / "ids.parquet")
+        spark.range(0, 50).write.parquet(path)
+        scan = spark.read.parquet(path)
+
+        def checkpointed(df):
+            out = _materialize_multipass_input(df)
+            plan = out._jdf.queryExecution().analyzed().toString()
+            return out is not df and "LogicalRDD" in plan
+
+        assert checkpointed(scan.withColumn("pid", F.spark_partition_id()))
+        assert checkpointed(scan.withColumn("r", F.rand(7)))
+        plain = scan.filter(F.col("id") > 3)
+        assert _materialize_multipass_input(plain) is plain
+
+
+class TestFailedCheckpoint:
+    """A checkpoint job that fails fails the call — no silent lazy
+    re-execution of the upstream."""
+
+    @pytest.fixture
+    def broken_checkpoint(self, monkeypatch):
+        from pyspark.sql.classic.dataframe import DataFrame
+
+        def fail(self, *args, **kwargs):
+            raise RuntimeError("checkpoint failed")
+
+        monkeypatch.setattr(DataFrame, "localCheckpoint", fail)
+
+    def test_global_rank(self, spark, broken_checkpoint):
+        from fcs_etl_reactor_spark.operators.ordering import global_rank
+
+        agg = spark.range(0, 100).groupBy((F.col("id") % 7).alias("k")).count()
+        with pytest.raises(RuntimeError, match="checkpoint failed"):
+            global_rank(agg, ["k"], num_partitions=2)
+
+    def test_pagerank(self, spark, broken_checkpoint):
+        from fcs_etl_reactor_spark.operators.graphs import pagerank
+
+        edges = spark.createDataFrame(
+            [("a", "b"), ("b", "c")], "src STRING, dst STRING"
+        )
+        with pytest.raises(RuntimeError, match="checkpoint failed"):
+            pagerank(edges, iters=2)
 
 
 class TestSimilarity:
@@ -855,6 +944,26 @@ class TestBpeTrainer:
         df = spark.createDataFrame([("aaaa aaaa",)], "text STRING")
         got = train_bpe(df, "text", n_merges=2)
         assert got == [(0, "a", "a"), (1, "aa", "aa")]
+
+    def test_input_read_once(self, spark):
+        """Every merge round reads the stored vocabulary, never the
+        corpus: 8 merges over 50 rows evaluate the input 50 times."""
+        from fcs_etl_reactor_spark.operators.bpe import train_bpe
+
+        acc = spark.sparkContext.accumulator(0)
+
+        def passthrough(text):
+            acc.add(1)
+            return text
+
+        words = ["lower", "lowest", "newer", "newest", "wider"]
+        df = spark.createDataFrame(
+            [(f"{words[i % 5]} {words[(i * 3) % 5]}",) for i in range(50)],
+            "text STRING",
+        ).select(F.udf(passthrough, "string")("text").alias("text"))
+        merges = train_bpe(df, "text", n_merges=8)
+        assert len(merges) == 8
+        assert acc.value == 50
 
 
 class TestEmptyInputs:
