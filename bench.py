@@ -5,7 +5,10 @@ Runs the headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1) on
 local[$SPARK_GRAFT_CPUS], one warm-up + median-of-3 steady-state
 timing per query, execution forced with a noop sink (no driver-side
 collect of large results). Prints ONE JSON line:
-  {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+  {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...,
+   "cpus": ..., "master": ...}
+"sf" is parsed from an sfX directory name (null for any other name);
+"cpus"/"master" are what the session resolved.
 """
 
 from __future__ import annotations
@@ -62,18 +65,12 @@ def time_query(spark, name: str, sf_dir: str) -> float:
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
+    try:
+        sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
+    except ValueError:
+        sf = None
     spark = tune_for_input(get_spark(app_name="fcs-etl-reactor-spark-bench"), sf_dir)
     spark.sparkContext.setLogLevel("ERROR")
-    # SPARK_GRAFT_AQE=off pins adaptive execution off for the whole
-    # run (round-8 verdict item 8: a per-round AQE-off pass over the
-    # headline set catches any query whose SPEED silently starts
-    # depending on runtime re-planning — correctness invariance is
-    # already swept by invariance_sweep --axis aqe). Default behavior
-    # and the driver's JSON contract are unchanged.
-    aqe_mode = os.environ.get("SPARK_GRAFT_AQE", "")
-    if aqe_mode.lower() == "off":
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     # Per-query isolation (round-2 lesson: one broken query aborted the
     # whole harness and the round had NO bench artifact). A failing
@@ -94,9 +91,9 @@ def main() -> int:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
+        "cpus": spark.sparkContext.defaultParallelism,
+        "master": spark.sparkContext.master,
     }
-    if aqe_mode.lower() == "off":
-        out["aqe"] = "off"  # never mistakable for a driver bench line
     if errors:
         out["errors"] = errors
     print(json.dumps(out))

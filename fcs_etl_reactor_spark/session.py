@@ -44,13 +44,6 @@ def get_spark(
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.enabled", "false")
     )
-    if os.environ.get("SPARK_GRAFT_MEMPROBE"):
-        # memory-probe runs (scripts/memory_probe.py) set this so a heap
-        # exhaustion kills the JVM immediately and is classified "oom"
-        # instead of GC-thrashing into a "timeout"
-        builder = builder.config(
-            "spark.driver.extraJavaOptions", "-XX:+ExitOnOutOfMemoryError"
-        )
     if master.startswith("local"):
         # LOCAL-MODE ONLY (core confs, fixed at context start): shuffle
         # blocks live in the page cache and are tiny at test SFs, so
@@ -65,8 +58,9 @@ def get_spark(
             .config("spark.locality.wait", "0s")
         )
     # last-wins overrides for diagnostic harnesses (e.g. the memory
-    # probe re-enables the UI to read spill metrics over REST); static
-    # confs here only take effect in a fresh process, like the rest
+    # probe passes -XX:+ExitOnOutOfMemoryError as
+    # spark.driver.extraJavaOptions); static confs here only take
+    # effect in a fresh process, like the rest
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
@@ -100,7 +94,15 @@ def tune_for_input(spark: SparkSession, sf_dir: str) -> SparkSession:
     total = 0
     try:
         for f in os.listdir(sf_dir):
-            total += os.path.getsize(os.path.join(sf_dir, f))
+            path = os.path.join(sf_dir, f)
+            if os.path.isdir(path):
+                # a Spark-written table is a directory of part files;
+                # the directory entry's own size is its inode's
+                total += sum(
+                    os.path.getsize(os.path.join(path, p)) for p in os.listdir(path)
+                )
+            else:
+                total += os.path.getsize(path)
     except OSError:
         total = 1 << 40  # unknown size: assume big, keep scale defaults
     parts = min(max(total // (32 << 20), 8), 4096)

@@ -16,12 +16,14 @@ roughly the executor shape of a budget cluster node — against the
 
 - outcome: ok / oom / error / timeout
 - wall-clock under pressure
-- shuffle/spill totals read from the Spark UI REST API
-  (memoryBytesSpilled, diskBytesSpilled, shuffle read/write, peak
-  JVM heap) — the same metrics a cluster operator would read
+- spill and shuffle read/write bytes of the query's jobs, read by
+  perfbench.spark_probe.SparkProbe from statusTracker and the status
+  store (the same stage metrics a cluster operator would read), and
+  the driver's peak JVM heap from the status store's executor list;
+  the Spark UI stays off
 
 The parent aggregates one markdown table (paste into BENCH.md). An
-`ok` row with nonzero diskBytesSpilled is the GOOD outcome at the
+`ok` row with nonzero spill is the GOOD outcome at the
 tight rung: the plan degraded to disk instead of dying. Spark's
 SQL operators (hash agg, sort-merge join, window sort) all have
 sort/spill fallbacks — this probe proves none of OUR compositions
@@ -41,7 +43,6 @@ import os
 import subprocess
 import sys
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -71,17 +72,13 @@ OOM_MARKERS = (
 )
 
 
-def _rest_json(url: str):
-    with urllib.request.urlopen(url, timeout=10) as r:
-        return json.loads(r.read().decode())
-
-
 def child(name: str, sf_dir: str) -> int:
     """Run ONE query under the capped session and print a MEMPROBE
     JSON line. Heap/cores arrive via SPARK_GRAFT_DRIVER_MEM and
     SPARK_GRAFT_CPUS (read by get_spark at JVM launch)."""
     from fcs_etl_reactor_spark.queries import QUERIES
     from fcs_etl_reactor_spark.session import get_spark, tune_for_input
+    from perfbench.spark_probe import SparkProbe
     from scripts.scale_probe import _EXTRA_PROBES
 
     fn = QUERIES.get(name) or _EXTRA_PROBES.get(name)
@@ -91,11 +88,9 @@ def child(name: str, sf_dir: str) -> int:
     spark = get_spark(
         app_name=f"mem-probe-{name}",
         extra_conf={
-            # UI back on: its REST API is the public surface for the
-            # executor/stage spill metrics this probe exists to read
-            "spark.ui.enabled": "true",
-            "spark.ui.port": "0",
-            "spark.ui.retainedStages": "2000",
+            # die fast on heap exhaustion instead of GC-thrashing, so
+            # the parent classifies the run "oom", not "timeout"
+            "spark.driver.extraJavaOptions": "-XX:+ExitOnOutOfMemoryError",
             # peak JVM metrics update on the heartbeat; poll every
             # second so short queries still report a real peak
             "spark.executor.metrics.pollingInterval": "1s",
@@ -103,22 +98,19 @@ def child(name: str, sf_dir: str) -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
     tune_for_input(spark, sf_dir)
+    probe = SparkProbe(spark)
+    group = probe.start(name)
     t0 = time.perf_counter()
     fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
     wall = time.perf_counter() - t0
+    counts = probe.collect(group)
 
-    sc = spark.sparkContext
-    base = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}"
-    spilled_mem = spilled_disk = shuf_read = shuf_write = 0
-    for st in _rest_json(f"{base}/stages?status=complete"):
-        spilled_mem += st.get("memoryBytesSpilled", 0)
-        spilled_disk += st.get("diskBytesSpilled", 0)
-        shuf_read += st.get("shuffleReadBytes", 0)
-        shuf_write += st.get("shuffleWriteBytes", 0)
+    executors = spark.sparkContext._jsc.sc().statusStore().executorList(True)
     peak_heap = 0
-    for ex in _rest_json(f"{base}/executors"):
-        peaks = ex.get("peakMemoryMetrics") or {}
-        peak_heap = max(peak_heap, peaks.get("JVMHeapMemory", 0))
+    for i in range(executors.size()):
+        peaks = executors.apply(i).peakMemoryMetrics()
+        if peaks.isDefined():
+            peak_heap = max(peak_heap, peaks.get().getMetricValue("JVMHeapMemory"))
     print(
         "MEMPROBE "
         + json.dumps(
@@ -126,10 +118,9 @@ def child(name: str, sf_dir: str) -> int:
                 "query": name,
                 "outcome": "ok",
                 "wall_s": round(wall, 2),
-                "spill_mem_mb": round(spilled_mem / 1e6, 1),
-                "spill_disk_mb": round(spilled_disk / 1e6, 1),
-                "shuffle_read_mb": round(shuf_read / 1e6, 1),
-                "shuffle_write_mb": round(shuf_write / 1e6, 1),
+                "spill_mb": round(counts["spill_bytes"] / 1e6, 1),
+                "shuffle_read_mb": round(counts["shuffle_read_bytes"] / 1e6, 1),
+                "shuffle_write_mb": round(counts["shuffle_write_bytes"] / 1e6, 1),
                 "peak_heap_mb": round(peak_heap / 1e6, 1),
             }
         ),
@@ -139,13 +130,7 @@ def child(name: str, sf_dir: str) -> int:
 
 
 def run_one(name: str, sf_dir: str, heap: str, cores: int, timeout_s: int) -> dict:
-    env = dict(
-        os.environ,
-        SPARK_GRAFT_DRIVER_MEM=heap,
-        SPARK_GRAFT_CPUS=str(cores),
-        # let the JVM die fast on heap exhaustion instead of GC-thrashing
-        SPARK_GRAFT_MEMPROBE="1",
-    )
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM=heap, SPARK_GRAFT_CPUS=str(cores))
     cmd = [sys.executable, os.path.abspath(__file__), "--child", name, sf_dir]
     t0 = time.perf_counter()
     try:
@@ -194,14 +179,13 @@ def main() -> int:
         rows.append(r)
         print(json.dumps(r), flush=True)
 
-    print(f"\n| query | outcome | wall s | spill mem MB | spill disk MB | "
-          f"shuffle w MB | peak heap MB |")
-    print("|---|---|---|---|---|---|---|")
+    print("\n| query | outcome | wall s | spill MB | shuffle w MB | peak heap MB |")
+    print("|---|---|---|---|---|---|")
     for r in rows:
         print(
             f"| {r['query']} | {r['outcome']} | {r.get('wall_s', '')} | "
-            f"{r.get('spill_mem_mb', '')} | {r.get('spill_disk_mb', '')} | "
-            f"{r.get('shuffle_write_mb', '')} | {r.get('peak_heap_mb', '')} |"
+            f"{r.get('spill_mb', '')} | {r.get('shuffle_write_mb', '')} | "
+            f"{r.get('peak_heap_mb', '')} |"
         )
     bad = [r["query"] for r in rows if r["outcome"] != "ok"]
     print(f"\n{len(rows) - len(bad)}/{len(rows)} completed under "

@@ -18,11 +18,8 @@ from pyspark.sql import SparkSession
 
 from fcs_etl_reactor_spark.queries import ORACLE, QUERIES
 from fcs_etl_reactor_spark.testkit import schema_diff
-from scripts.driver_sim import TABLES, value_hash
+from scripts.driver_sim import SF as DEFAULT_SF, TABLES, value_hash
 from scripts.cliutil import sf_arg
-
-
-SF = sf_arg("/root/testdata/sf0.01")
 
 TS_QUERIES = [
     "q41_event_gaps", "q47_time_frames", "q49_calendar_parts",
@@ -64,6 +61,7 @@ TS_QUERIES = [
 
 
 def main() -> int:
+    sf = sf_arg(DEFAULT_SF)
     spark = (
         SparkSession.builder.master("local[16]")
         .appName("tz-probe")
@@ -75,12 +73,12 @@ def main() -> int:
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')"
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
         )
     bad = []
     for name in TS_QUERIES:
         try:
-            sdf = QUERIES[name](spark, SF)
+            sdf = QUERIES[name](spark, sf)
             srows = sdf.collect()
             rel = con.sql(ORACLE[name])
             orows = rel.fetchall()
