@@ -15,7 +15,7 @@ Layout:
   operators/    custom operators (as-of join, dedup, similarity, gates, …)
   sources/      non-parquet sources (FCS binary parser, …)
   streaming/    Structured Streaming forms of the windowed operators
-  testkit.py    local DuckDB differ replicating the driver's check
+  testkit.py    the driver's oracle check (schema, row count, value hash)
 """
 
 __version__ = "0.1.0"

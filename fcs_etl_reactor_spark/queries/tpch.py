@@ -478,7 +478,7 @@ def qt14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # qt15 — TPC-H Q15 shape: top supplier (revenue view + scalar MAX
 # equality). The view is the quarter's revenue per supplier; the
-# original's CREATE VIEW + WHERE total = (SELECT MAX...) becomes an
+# original's revenue0 view + WHERE total = (SELECT MAX...) becomes an
 # agg + 1-row broadcast max compared on scaled BIGINTs (exact — ties
 # would surface BOTH suppliers in both engines, as in the spec).
 # --------------------------------------------------------------------------

@@ -1,10 +1,9 @@
 """Shared argv helpers for the diagnostic scripts.
 
 One implementation of the sf_dir positional (previously copy-pasted
-verbatim into tz_probe / driver_sim / dump_plans / concurrency_bench,
-per ADVICE r8) so the next argv-handling fix lands in exactly one
-place. Uses argparse so an unknown flag errors out instead of being
-swallowed as the sf_dir positional (run_differ's round-7 fix), and
+verbatim into four scripts, per ADVICE r8) so the next argv-handling
+fix lands in exactly one place. Uses argparse so an unknown flag
+errors out instead of being swallowed as the sf_dir positional, and
 validates that the resolved sf_dir actually exists — a typo'd or
 misplaced argument must die loudly, not sweep against a nonexistent
 path.

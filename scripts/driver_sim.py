@@ -1,67 +1,71 @@
 #!/usr/bin/env python
-"""Simulate the DRIVER's view of this repo: import __spark_entry__,
-run entry() on a vanilla SparkSession, then run every queries() entry
-at sf0.01 and hash-compare against oracle_sql() via DuckDB — the same
-row-count + schema + order-insensitive value-hash the driver records.
+"""Driver replica: check the oracle pairs the way the driver does.
+
+Imports __spark_entry__, runs entry() on a vanilla SparkSession, then
+checks every oracle-paired query (or the named subset) with testkit's
+copy of the driver's gate: schema, row count and order-insensitive
+value hash against DuckDB. A failing query prints its first differing
+canonical lines.
+
+Usage:
+  python scripts/driver_sim.py [sf_dir | --sf N] [query ...] [--tz ZONE]
+
+`--sf N` expands to /root/testdata/sfN (default sf0.01). `--tz ZONE`
+runs the session in ZONE with 7 shuffle partitions: io.load pins the
+session timezone to UTC, and this shows the pin holds whatever
+session the driver brings.
 """
 
-import hashlib
+from __future__ import annotations
+
+import argparse
+import os
 import sys
 
-sys.path.insert(0, ".")
-
-import duckdb
-from pyspark.sql import SparkSession
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as ent
-from scripts.cliutil import sf_arg
+from fcs_etl_reactor_spark.testkit import run_all
+from scripts.cliutil import require_dir
+
+# perfbench/registry_iterative's oracle check imports these two from here
+from fcs_etl_reactor_spark.io import TABLES
+from fcs_etl_reactor_spark.testkit import value_hash
+
+SF = "/root/testdata/sf0.01"
 
 
-# parse argv only when run as a script: tz_probe imports this module
-# for TABLES/value_hash and must not have its argv re-parsed here
-SF = sf_arg("/root/testdata/sf0.01") if __name__ == "__main__" else "/root/testdata/sf0.01"
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
-
-
-def canon_cell(v):
-    # Mirrors the REAL driver's canonicalizer, which pandas-sorts every
-    # output column: a top-level ARRAY/STRUCT/MAP cell crashes it with
-    # "unhashable type" (observed in CORRECTNESS_r01). This sim must
-    # never be more lenient than production, so the same shapes are a
-    # hard error here.
-    import datetime as dt
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        return repr(v)
-    if isinstance(v, dt.datetime):
-        # keep the offset: a tz-aware cell must NOT hash equal to its
-        # naive twin (the driver rejects TIMESTAMPTZ oracles)
-        return v.isoformat()
-    if isinstance(v, dt.date):
-        return v.isoformat()
-    if isinstance(v, (list, tuple, dict)) or hasattr(v, "asDict"):
-        raise TypeError(
-            f"top-level complex cell {type(v).__name__} crashes the driver's "
-            "canonicalizer — serialize arrays/structs/maps to strings in the query"
-        )
-    return str(v)
-
-
-def value_hash(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    lines = sorted("|".join(canon_cell(r[i]) for i in order) for r in rows)
-    h = hashlib.sha256()
-    for ln in lines:
-        h.update(ln.encode())
-        h.update(b"\n")
-    return h.hexdigest()
+def _parse_args():
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("sf_dir", nargs="?", default=None, help=f"fixture directory (default {SF})")
+    ap.add_argument("queries", nargs="*", help="optional subset of registered query names")
+    ap.add_argument("--sf", metavar="N", help="scale factor shorthand: --sf 0.01 -> /root/testdata/sf0.01")
+    ap.add_argument("--tz", metavar="ZONE", help="session timezone, with 7 shuffle partitions")
+    args = ap.parse_args()
+    if args.sf is not None:
+        if args.sf_dir is not None:
+            # `--sf 0.01 q1 q2` parses q1 into sf_dir; shift it back
+            args.queries.insert(0, args.sf_dir)
+        args.sf_dir = f"/root/testdata/sf{args.sf}"
+    args.sf_dir = require_dir(ap, args.sf_dir or SF)
+    unknown = [n for n in args.queries if n not in ent.oracle_sql()]
+    if unknown:
+        ap.error(f"no oracle-paired query named {unknown}")
+    return args
 
 
 def main():
+    args = _parse_args()
+    from pyspark.sql import SparkSession
+
     # vanilla session — deliberately NOT our tuned factory; the driver
     # brings its own. Keep default shuffle partitions etc.
-    spark = SparkSession.builder.master("local[16]").appName("driver-sim").getOrCreate()
+    builder = SparkSession.builder.master("local[16]").appName("driver-sim")
+    if args.tz:
+        builder = builder.config("spark.sql.session.timeZone", args.tz).config(
+            "spark.sql.shuffle.partitions", "7"
+        )
+    spark = builder.getOrCreate()
 
     # t1 smoke
     df = ent.entry(spark)
@@ -69,56 +73,17 @@ def main():
     print(f"t1 smoke: entry() -> {len(rows)} rows, schema={[f.name for f in df.schema.fields]}")
     assert len(rows) > 0
 
-    qs = ent.queries()
-    oracles = ent.oracle_sql()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
-
-    n_pass = n_rowsonly = 0
+    names = args.queries or list(ent.oracle_sql())
     fails = []
-    for i, (name, fn) in enumerate(qs.items()):
-        # The real driver verifies a 50-query window per session; this
-        # sim runs the FULL registry in one vanilla (1g-heap) session,
-        # which pins every executed plan's broadcasts. Release caches
-        # at the real driver's cadence so sim-only heap pressure can't
-        # masquerade as a product failure (observed: 4 late-run heap
-        # OOMs at the 255-entry registry before this).
-        if i and i % 50 == 0:
-            spark.__dict__.pop("_fcs_plan_cache", None)
-            spark.catalog.clearCache()
-        try:
-            sdf = fn(spark, SF)
-            srows = sdf.collect()
-            scols = sdf.columns
-            if name not in oracles:
-                # the REAL driver records these as err "no_oracle" — a
-                # weaker rows-only signal, surfaced loudly here
-                n_rowsonly += 1
-                # still canonicalize so array-valued cells fail fast
-                value_hash(srows, scols)
-                print(f"  [rows-only → driver err no_oracle] {name}: {len(srows)} rows")
-                continue
-            rel = con.sql(oracles[name])
-            orows = rel.fetchall()
-            ocols = list(rel.columns)
-            # type-strict (round-2 lesson): names-only masked the
-            # TIMESTAMPTZ/HUGEINT class the driver rejects
-            from fcs_etl_reactor_spark.testkit import schema_diff
-
-            ok_schema = not schema_diff(sdf, rel)
-            ok_count = len(srows) == len(orows)
-            ok_hash = value_hash(srows, scols) == value_hash(orows, ocols)
-        except Exception as exc:  # the driver records the traceback as err
-            fails.append((name, "EXC", repr(exc)))
-            print(f"  [ERR] {name}: {exc}")
+    for res in run_all(spark, args.sf_dir, names):
+        if res.ok:
             continue
-        if ok_schema and ok_count and ok_hash:
-            n_pass += 1
-        else:
-            fails.append((name, ok_schema, ok_count, ok_hash))
-            print(f"  [FAIL] {name}: schema={ok_schema} count={ok_count} hash={ok_hash}")
-    print(f"t2: {n_pass}/{len(oracles)} oracle pairs hash-match; {n_rowsonly} rows-only entries ran")
+        fails.append(res.name)
+        print(f"  {res}", flush=True)
+        for s, o in res.mismatches:
+            print(f"    spark : {s}\n    oracle: {o}")
+    tz = f" under session tz {args.tz}" if args.tz else ""
+    print(f"t2: {len(names) - len(fails)}/{len(names)} oracle pairs hash-match at {args.sf_dir}{tz}")
     if fails:
         print("FAILURES:", fails)
         return 1

@@ -36,11 +36,7 @@ import duckdb
 
 from bench import HEADLINE, RUNS, WARMUPS
 from fcs_etl_reactor_spark.queries import ORACLE
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
+from fcs_etl_reactor_spark.testkit import duck_connection
 
 
 def main() -> int:
@@ -50,13 +46,8 @@ def main() -> int:
     except ValueError:
         sf = -1.0  # basename not sf<number> — still measure, just untagged
 
-    con = duckdb.connect()
+    con = duck_connection(sf_dir)
     con.execute(f"SET threads TO {os.cpu_count() or 32}")
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
 
     timings = {}
     errors = {}

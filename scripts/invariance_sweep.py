@@ -15,12 +15,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from fcs_etl_reactor_spark.queries import QUERIES
 from fcs_etl_reactor_spark.session import get_spark
-from scripts.driver_sim import value_hash
+from fcs_etl_reactor_spark.testkit import value_hash
 
 
 def _parse_args():
     # argparse, not bare sys.argv: an unknown flag must error out, not
-    # be swallowed as the sf_dir positional (run_differ's round-7 fix,
+    # be swallowed as the sf_dir positional (the round-7 differ fix,
     # applied to the siblings per verdict item 7's "and siblings")
     import argparse
 

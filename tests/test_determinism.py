@@ -6,7 +6,7 @@ drift."""
 import pytest
 
 from fcs_etl_reactor_spark.queries import QUERIES
-from scripts.driver_sim import value_hash
+from fcs_etl_reactor_spark.testkit import value_hash
 from tests.conftest import SF_SMALL
 
 REPRESENTATIVE = [

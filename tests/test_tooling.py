@@ -59,6 +59,15 @@ def test_script_imports(name):
     importlib.import_module(f"scripts.{name}")
 
 
+def test_driver_sim_runs_from_any_directory(tmp_path):
+    proc = subprocess.run(
+        [sys.executable, os.path.join(REPO, "scripts", "driver_sim.py"), "--help"],
+        cwd=tmp_path, capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert "--tz" in proc.stdout
+
+
 def test_extra_conf_reaches_driver_jvm_options():
     """``extra_conf`` static confs reach the JVM launch: the memory
     probe relies on this for -XX:+ExitOnOutOfMemoryError."""
